@@ -95,6 +95,11 @@ class PipelineConfig:
     # fingerprints (short docs whose ENTIRE fp set may be boilerplate-
     # hot); beyond it the bucket is dropped outright and logged.
     hot_fp_hard_cap: int = 4096
+    # Partition count of the keymap coalesce (plans/pipeline.py), the
+    # distributed connected-components edge table and the gate queries
+    # that repartition explicitly. The pipeline's keyed exchanges
+    # (signatures, Stage B bands, Stage C fingerprints) take no count:
+    # AQE sizes them by bytes, so this does not pin their task waves.
     shuffle_partitions: int = 32
     # Count-first hot-key exclusion before collect_list (Stage B/C).
     # Required at web scale: a degenerate bucket must be dropped from

@@ -92,9 +92,18 @@ def explode_bands(sigs: DataFrame) -> DataFrame:
     # ONE explode over the concatenated band arrays (r6): the former
     # tok ∪ chr union scanned the cached signature table twice; band
     # hashes are family-salted at signature time, so the merged array
-    # yields the identical (bucket, key) multiset in one pass.
+    # yields the identical (bucket, key) multiset in one pass. concat is
+    # NULL if either side is: each side defaults to an empty array, so a
+    # NULL family (signatures re-read from parquet are nullable) drops
+    # only its own buckets, not the doc's other family.
+    empty = F.array().cast("array<bigint>")
     return sigs.select(
-        F.explode(F.concat("bands_tok", "bands_chr")).alias("bucket"), "key"
+        F.explode(
+            F.concat(
+                F.coalesce("bands_tok", empty), F.coalesce("bands_chr", empty)
+            )
+        ).alias("bucket"),
+        "key",
     )
 
 
@@ -150,7 +159,11 @@ def candidate_pairs(
         # via ReusedExchange). The hot-bucket anti-join moves
         # post-shuffle; hot rows ride the one exchange but never reach a
         # collect_list. Halves the largest shuffle of the pipeline.
-        bands = bands.repartition(cfg.shuffle_partitions, *bucket_cols)
+        # No explicit count: it is still a hash exchange at planning
+        # time, so the reuse holds, and AQE coalesces it by bytes (a
+        # repartition(N, col) is never coalesced: N tasks per stage even
+        # when most are empty).
+        bands = bands.repartition(*bucket_cols)
         sizes = bands.groupBy(*bucket_cols).agg(F.count("*").alias("bucket_n"))
         dropped = sizes.filter(F.col("bucket_n") > cfg.max_band_bucket)
         bands = bands.join(

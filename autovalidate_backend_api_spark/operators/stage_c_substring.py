@@ -102,8 +102,8 @@ def fingerprint_candidates(
         # (VERDICT r2 "What's wrong" #1: the r2 rescue re-joined the full
         # items table unconditionally — a 23% bench regression).
         # One explicit exchange on fp serves both the size count and the
-        # member collect (ReusedExchange — see stage_b_lsh).
-        items = items.repartition(cfg.shuffle_partitions, "fp")
+        # member collect (ReusedExchange), sized by AQE — see stage_b_lsh.
+        items = items.repartition("fp")
         sizes = items.groupBy("fp").agg(
             F.count("*").alias("bucket_n"),
             F.sum(F.col("m.is_poor").cast("int")).alias("poor_n"),

@@ -193,24 +193,24 @@ def run_pipeline(
     )
 
     # ---- signatures: one Arrow pass over sha-survivors ------------------
-    # hash-partitioned by key: the four verify joins (Stage B src/dst,
-    # Stage C phase-1 + phase-2) then reuse this partitioning instead of
-    # re-exchanging the fat signature table each time (measured 1.8×
-    # on the verify stage; partitioning survives persist() in ephemeral
-    # mode — on Iceberg, bucket the table by key for the same effect).
-    # The repartition sits BEFORE the signature UDF (r6): the exchange
-    # then carries (key, content) — ~1 KB/row — instead of the post-UDF
-    # rows with shingle/band/winnow arrays (~3.5 KB/row), a 3× shuffle-
-    # byte cut on the one content-bearing exchange of the pipeline, and
-    # hash partitioning is preserved through the row-wise UDF so every
-    # downstream join still reuses it (plan-pinned by test_plans).
+    # hash-partitioned by key, with no explicit count: AQE coalesces the
+    # exchange by bytes, so the signature UDF runs as many Python tasks
+    # as the data needs. Every Python-UDF task pays a fixed worker cost
+    # (~0.17 s of CPU at any row count, CLAUDE.md "Sandbox gotchas"); a
+    # pinned repartition(N, key) is never coalesced, so it would pay that
+    # cost N times even for a few hundred docs. The exchange sits BEFORE
+    # the UDF (r6): it carries (key, content) — ~1 KB/row — instead of
+    # the post-UDF shingle/band/winnow arrays (~3.5 KB/row). The verify
+    # joins do not rely on this partitioning: in checkpoint mode they
+    # read the signatures back from parquet, and in either mode AQE
+    # picks their strategy (see stage_b_lsh.verify_pairs).
     sigs = timed(
         "signatures",
         lambda: ckpt.get_or_compute(
             "signatures",
             lambda: with_signatures(
                 hashed.join(survivors.select("key"), "key", "left_semi")
-                .repartition(cfg.shuffle_partitions, "key"),
+                .repartition("key"),
                 cfg,
                 include_winnow=True,
             )

@@ -58,6 +58,23 @@ def test_empty_corpus(spark):
     assert got == {}
 
 
+def test_null_token_bands_keep_char_buckets(spark):
+    """Signatures read back from parquet are nullable. A row whose
+    bands_tok is NULL must still yield its char-family buckets (and vice
+    versa), so the pair stays an LSH candidate through the other family."""
+    from autovalidate_backend_api_spark.operators import stage_b_lsh as B
+
+    sigs = spark.createDataFrame(
+        [(1, None, [10, 11], 5), (2, [20], [10, 11], 5), (3, [30], None, 5)],
+        "key long, bands_tok array<bigint>, bands_chr array<bigint>, "
+        "n_shingles int",
+    )
+    got = sorted(tuple(r) for r in B.explode_bands(sigs).collect())
+    assert got == [(10, 1), (10, 2), (11, 1), (11, 2), (20, 2), (30, 3)]
+    pairs, _ = B.candidate_pairs(sigs)
+    assert [tuple(r) for r in pairs.collect()] == [(1, 2)]
+
+
 # ---------------------------------------------------------------------------
 # degenerate inputs for the round-4 operators (semdedup, incremental)
 # ---------------------------------------------------------------------------

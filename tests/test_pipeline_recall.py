@@ -122,3 +122,36 @@ def test_config_change_invalidates_checkpoints(spark, pipeline_run):
     assert not mgr.exists("stage_b_pairs")
     mgr_same = CheckpointManager(spark, tmp, "pytest", PINNED.config_hash())
     assert mgr_same.exists("stage_b_pairs")
+
+
+def test_outputs_do_not_depend_on_shuffle_partitions(spark, tmp_path):
+    """The keyed exchanges (signatures, Stage B bands, Stage C
+    fingerprints) take their partition count from the session, so AQE
+    can size them by bytes. The clusters and confirmed pairs of a
+    checkpointed run must not change with that count. AQE coalescing is
+    off here, so the two runs really use 8 and 3 partitions."""
+    corpus_df = spark.createDataFrame(C.corpus_pandas(60, seed=11))
+    confs = ("spark.sql.shuffle.partitions",
+             "spark.sql.adaptive.coalescePartitions.enabled")
+    prev = {k: spark.conf.get(k) for k in confs}
+    outs = []
+    try:
+        spark.conf.set(confs[1], "false")
+        for n in (8, 3):
+            spark.conf.set(confs[0], str(n))
+            res = run_pipeline(
+                spark, corpus_df, str(tmp_path / f"sp{n}"), run_id="sp",
+                verbose=False,
+            )
+            outs.append((
+                {tuple(r) for r in res.clusters.collect()},
+                {tuple(r) for r in res.confirmed_pairs.collect()},
+            ))
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    (clusters8, pairs8), (clusters3, pairs3) = outs
+    # every stage that feeds confirmed_pairs contributes
+    assert {r[-1] for r in pairs8} >= {"sha", "minhash", "substring"}
+    assert clusters8 == clusters3
+    assert pairs8 == pairs3

@@ -42,9 +42,17 @@ _NL_WHITELIST = {
 }
 
 
+# name → executed-plan string: both audits and the named pins read the
+# same plan, so each query is planned once per module (planning the whole
+# queries() surface dominates this module's cost).
+_PLANS: dict[str, str] = {}
+
+
 def _plan_of(name, spark, sf_dir) -> str:
-    df = QUERIES[name](spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+    if name not in _PLANS:
+        df = QUERIES[name](spark, sf_dir)
+        _PLANS[name] = df._jdf.queryExecution().executedPlan().toString()
+    return _PLANS[name]
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - _NL_WHITELIST))

@@ -145,11 +145,18 @@ def test_sessionize_stateful_matches_batch_on_ordered_stream(spark, tmp_path):
         df.coalesce(1).write.parquet(f"{src}/tmp{i}")
         all_rows += rows
     import glob
+    import os
     import shutil
+    import time
 
+    # FileStreamSource orders files by mtime, and copies made within one
+    # clock tick tie: strictly increasing mtimes make the in-order
+    # arrival this test is about hold.
+    t0 = time.time() - 60
     for i in range(len(files)):
         part = glob.glob(f"{src}/tmp{i}/part-*.parquet")[0]
         shutil.copy(part, f"{src}/file_{i}.parquet")
+        os.utime(f"{src}/file_{i}.parquet", (t0 + i, t0 + i))
         shutil.rmtree(f"{src}/tmp{i}")
 
     emitted, n_batches = _stream_to_memory(
