@@ -95,31 +95,26 @@ class PipelineConfig:
     # fingerprints (short docs whose ENTIRE fp set may be boilerplate-
     # hot); beyond it the bucket is dropped outright and logged.
     hot_fp_hard_cap: int = 4096
-    # Partition count of the keymap coalesce (plans/pipeline.py), the
-    # distributed connected-components edge table and the gate queries
-    # that repartition explicitly. The pipeline's keyed exchanges
-    # (signatures, Stage B bands, Stage C fingerprints) take no count:
-    # AQE sizes them by bytes, so this does not pin their task waves.
+    # Partition count of the keymap coalesce (plans/pipeline.py) and the
+    # gate queries that repartition explicitly. The pipeline's keyed
+    # exchanges (signatures, Stage B bands, Stage C fingerprints) take no
+    # count: AQE sizes them by bytes, so this does not pin their task
+    # waves.
     shuffle_partitions: int = 32
-    # Count-first hot-key exclusion before collect_list (Stage B/C).
-    # Required at web scale: a degenerate bucket must be dropped from
-    # counts (map-side combinable) — never materialized as one task's
-    # collect_list. Costs one extra compact shuffle.
-    hot_key_precheck: bool = True
     # (a `salt_buckets` knob for hot band-hash keys was removed in r5 —
     # the implemented hot-key strategy is count-first drop-and-log, and
     # Stage A's two-phase agg carries its own local SALT_BUCKETS=16;
     # removal changes config_hash, invalidating pre-r5 checkpoints.)
-    cc_max_iterations: int = 25       # connected-components bound
     # Size dispatch for connected components: an edge set at or below
     # this count is collected and solved with driver-side union-find
     # (milliseconds, zero iterative Spark jobs — dup-pair edge sets are
-    # tiny relative to the corpus); above it the distributed iterative
-    # algorithms run. Driver memory at the 2M cap (revised, ADVICE r3):
+    # tiny relative to the corpus); above it large-star/small-star runs
+    # (connected_components.py). Driver memory at the 2M cap (ADVICE r3):
     # the Arrow collect lands two flat int64 columns (~32 MB), but
     # union-find's parent/size dicts hold up to 4M Python int keys —
     # ~400-600 MB peak. Fine for the multi-GB driver heaps this targets;
-    # lower it on small drivers (the distributed path is always correct).
+    # lower it on small drivers (the distributed path is always correct;
+    # 0 sends every non-empty edge set there).
     cc_driver_max_edges: int = 2_000_000
 
     def config_hash(self) -> str:

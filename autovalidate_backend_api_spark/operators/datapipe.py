@@ -1999,7 +1999,7 @@ def repo_fork_clusters(
     under transitivity by Stage D's connected components, one canonical
     repo (lexicographic min) per family. The repo-granularity twin of
     the flagship pipeline's cluster stage: same CC operator (size-
-    dispatched driver union-find / distributed min-label), same
+    dispatched driver union-find / large-star/small-star), same
     survivor rule.
 
     Returns ``repo, canonical_repo, cluster_size, is_fork``.
@@ -2007,7 +2007,7 @@ def repo_fork_clusters(
     100 TB plan: inherits repo_file_overlap_pairs' bounds (hash-width
     shuffles, cap² pair expansion); the edge set is repo-granularity
     (orders of magnitude smaller than file pairs), so CC's driver
-    dispatch almost always applies — and the distributed min-label path
+    dispatch almost always applies — and large-star/small-star
     stands behind it for adversarial fork graphs.
     """
     from autovalidate_backend_api_spark.operators.connected_components import (
@@ -2024,7 +2024,7 @@ def repo_fork_clusters(
         F.col("repo_a").alias("src"), F.col("repo_b").alias("dst")
     )
     vertices = files.select(F.col("repo").alias("key")).distinct()
-    labels = connected_components(vertices, edges, on_exhaustion="star")
+    labels = connected_components(vertices, edges)
     sizes = labels.groupBy("cluster_rep").agg(
         F.count("*").cast("bigint").alias("cluster_size")
     )

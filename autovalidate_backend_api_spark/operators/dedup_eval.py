@@ -64,8 +64,10 @@ def exact_pairs(
     the index (same spec as ``repo_file_overlap_pairs``'s
     ``max_repos_per_hash``: pair expansion is bounded by cap², and the
     drop is part of the operator's contract — pairs that share ONLY
-    boilerplate shingles are not emitted, and their intersection counts
-    exclude dropped shingles). ``None`` (the default, used by every
+    boilerplate shingles are not emitted, and both the intersection
+    count ``ni`` and the per-doc sizes ``na``/``nb`` are computed over
+    the capped index, so a Jaccard ni/(na+nb-ni) changes in numerator
+    and denominator alike). ``None`` (the default, used by every
     eval/calibration gate) keeps the join exact: eval corpora are
     sample-sized by design. Set it when pointing this at a full corpus.
     """

@@ -350,7 +350,7 @@ def fs_linkage_clusters(
     )
     edges = tagged.join(F.broadcast(accepted), gnames).select("src", "dst")
     vertices = records.select(F.col(id_col).alias("key")).distinct()
-    labels = connected_components(vertices, edges, on_exhaustion="star")
+    labels = connected_components(vertices, edges)
     sizes = labels.groupBy("cluster_rep").agg(
         F.count("*").cast("bigint").alias("cluster_size")
     )

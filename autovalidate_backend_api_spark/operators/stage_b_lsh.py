@@ -144,46 +144,34 @@ def candidate_pairs(
     if bucket_filter is not None:
         bands = bands.join(bucket_filter.distinct(), "bucket", "left_semi")
 
-    if cfg.hot_key_precheck:
-        # scale-correct order: count first (map-side partial agg — a
-        # degenerate bucket costs one long per partition), broadcast the
-        # hot keys, and exclude them BEFORE collect_list ever
-        # materializes a giant member array in a single task. This is
-        # the explicit skew guard of SURVEY.md §4; AQE skew-join can't
-        # help inside an aggregation.
-        #
-        # ONE exchange serves both aggregations: the band table is
-        # explicitly hash-partitioned on the bucket key, so the size
-        # count AND the member collect both group on their child's
-        # partitioning (no second exchange — Spark reuses the shuffle
-        # via ReusedExchange). The hot-bucket anti-join moves
-        # post-shuffle; hot rows ride the one exchange but never reach a
-        # collect_list. Halves the largest shuffle of the pipeline.
-        # No explicit count: it is still a hash exchange at planning
-        # time, so the reuse holds, and AQE coalesces it by bytes (a
-        # repartition(N, col) is never coalesced: N tasks per stage even
-        # when most are empty).
-        bands = bands.repartition(*bucket_cols)
-        sizes = bands.groupBy(*bucket_cols).agg(F.count("*").alias("bucket_n"))
-        dropped = sizes.filter(F.col("bucket_n") > cfg.max_band_bucket)
-        bands = bands.join(
-            F.broadcast(dropped.select(*bucket_cols)), bucket_cols, "left_anti"
-        )
-        buckets = bands.groupBy(*bucket_cols).agg(
-            F.collect_list("key").alias("members"), F.count("*").alias("bucket_n")
-        )
-        kept = buckets.filter(F.col("bucket_n") > 1)
-    else:
-        # single-shuffle variant (small corpora): cap after the fact
-        buckets = bands.groupBy(*bucket_cols).agg(
-            F.collect_list("key").alias("members"), F.count("*").alias("bucket_n")
-        )
-        dropped = buckets.filter(F.col("bucket_n") > cfg.max_band_bucket).select(
-            *bucket_cols, "bucket_n"
-        )
-        kept = buckets.filter(
-            (F.col("bucket_n") > 1) & (F.col("bucket_n") <= cfg.max_band_bucket)
-        )
+    # scale-correct order: count first (map-side partial agg — a
+    # degenerate bucket costs one long per partition), broadcast the
+    # hot keys, and exclude them BEFORE collect_list ever
+    # materializes a giant member array in a single task. This is
+    # the explicit skew guard of SURVEY.md §4; AQE skew-join can't
+    # help inside an aggregation.
+    #
+    # ONE exchange serves both aggregations: the band table is
+    # explicitly hash-partitioned on the bucket key, so the size
+    # count AND the member collect both group on their child's
+    # partitioning (no second exchange — Spark reuses the shuffle
+    # via ReusedExchange). The hot-bucket anti-join moves
+    # post-shuffle; hot rows ride the one exchange but never reach a
+    # collect_list. Halves the largest shuffle of the pipeline.
+    # No explicit count: it is still a hash exchange at planning
+    # time, so the reuse holds, and AQE coalesces it by bytes (a
+    # repartition(N, col) is never coalesced: N tasks per stage even
+    # when most are empty).
+    bands = bands.repartition(*bucket_cols)
+    sizes = bands.groupBy(*bucket_cols).agg(F.count("*").alias("bucket_n"))
+    dropped = sizes.filter(F.col("bucket_n") > cfg.max_band_bucket)
+    bands = bands.join(
+        F.broadcast(dropped.select(*bucket_cols)), bucket_cols, "left_anti"
+    )
+    buckets = bands.groupBy(*bucket_cols).agg(
+        F.collect_list("key").alias("members"), F.count("*").alias("bucket_n")
+    )
+    kept = buckets.filter(F.col("bucket_n") > 1)
     members = F.col("members")
     pair_arr = F.flatten(
         F.transform(

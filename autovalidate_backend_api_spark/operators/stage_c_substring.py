@@ -94,50 +94,39 @@ def fingerprint_candidates(
     )
     if fp_filter is not None:
         items = items.join(fp_filter.distinct(), "fp", "left_semi")
-    if cfg.hot_key_precheck:
-        # count-first hot-key exclusion — see stage_b_lsh.candidate_pairs.
-        # The poor-member count rides the SAME aggregation (map-side
-        # combinable), so deciding which hot buckets stay alive for the
-        # rescue costs no extra pass over the exploded fingerprint table
-        # (VERDICT r2 "What's wrong" #1: the r2 rescue re-joined the full
-        # items table unconditionally — a 23% bench regression).
-        # One explicit exchange on fp serves both the size count and the
-        # member collect (ReusedExchange), sized by AQE — see stage_b_lsh.
-        items = items.repartition("fp")
-        sizes = items.groupBy("fp").agg(
-            F.count("*").alias("bucket_n"),
-            F.sum(F.col("m.is_poor").cast("int")).alias("poor_n"),
+    # count-first hot-key exclusion — see stage_b_lsh.candidate_pairs.
+    # The poor-member count rides the SAME aggregation (map-side
+    # combinable), so deciding which hot buckets stay alive for the
+    # rescue costs no extra pass over the exploded fingerprint table
+    # (VERDICT r2 "What's wrong" #1: the r2 rescue re-joined the full
+    # items table unconditionally — a 23% bench regression).
+    # One explicit exchange on fp serves both the size count and the
+    # member collect (ReusedExchange), sized by AQE — see stage_b_lsh.
+    items = items.repartition("fp")
+    sizes = items.groupBy("fp").agg(
+        F.count("*").alias("bucket_n"),
+        F.sum(F.col("m.is_poor").cast("int")).alias("poor_n"),
+    )
+    # dropped outright: beyond the hard cap, or hot with no poor
+    # prober (nothing to rescue there — a rich doc's OTHER
+    # fingerprints carry its recall)
+    dropped = sizes.filter(
+        (F.col("bucket_n") > cfg.hot_fp_hard_cap)
+        | (
+            (F.col("bucket_n") > cfg.max_fingerprint_bucket)
+            & (F.col("poor_n") == 0)
         )
-        # dropped outright: beyond the hard cap, or hot with no poor
-        # prober (nothing to rescue there — a rich doc's OTHER
-        # fingerprints carry its recall)
-        dropped = sizes.filter(
-            (F.col("bucket_n") > cfg.hot_fp_hard_cap)
-            | (
-                (F.col("bucket_n") > cfg.max_fingerprint_bucket)
-                & (F.col("poor_n") == 0)
-            )
-        )
-        # ONE pass over items, ONE grouped shuffle: surviving hot buckets
-        # (≤ hard cap, poor-probed) ride the same collect_list as normal
-        # buckets — identifiable downstream by bucket_n alone, since
-        # every OTHER hot bucket was anti-joined away. Their probe set is
-        # restricted to the poor docs inside pair generation below.
-        items = items.join(F.broadcast(dropped.select("fp")), ["fp"], "left_anti")
-        buckets = items.groupBy("fp").agg(
-            F.collect_list("m").alias("members"), F.count("*").alias("bucket_n")
-        )
-        kept = buckets.filter(F.col("bucket_n") > 1)
-    else:
-        buckets = items.groupBy("fp").agg(
-            F.collect_list("m").alias("members"), F.count("*").alias("bucket_n")
-        )
-        dropped = buckets.filter(
-            F.col("bucket_n") > cfg.max_fingerprint_bucket
-        ).select("fp", "bucket_n")
-        kept = buckets.filter(
-            (F.col("bucket_n") > 1) & (F.col("bucket_n") <= cfg.max_fingerprint_bucket)
-        )
+    )
+    # ONE pass over items, ONE grouped shuffle: surviving hot buckets
+    # (≤ hard cap, poor-probed) ride the same collect_list as normal
+    # buckets — identifiable downstream by bucket_n alone, since
+    # every OTHER hot bucket was anti-joined away. Their probe set is
+    # restricted to the poor docs inside pair generation below.
+    items = items.join(F.broadcast(dropped.select("fp")), ["fp"], "left_anti")
+    buckets = items.groupBy("fp").agg(
+        F.collect_list("m").alias("members"), F.count("*").alias("bucket_n")
+    )
+    kept = buckets.filter(F.col("bucket_n") > 1)
     # normal buckets: bottom-h probe sketch; rescue (hot) buckets: ONLY
     # fingerprint-poor docs probe (their entire fp set may be boilerplate-
     # hot — the cap alone would orphan them; rich docs reach the bucket's

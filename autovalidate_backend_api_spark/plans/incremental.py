@@ -41,10 +41,11 @@ from autovalidate_backend_api_spark.functions.signatures import (
 )
 from autovalidate_backend_api_spark.operators import stage_b_lsh as B
 from autovalidate_backend_api_spark.operators import stage_c_substring as C
-from autovalidate_backend_api_spark.operators.connected_components import (
-    connected_components,
+from autovalidate_backend_api_spark.plans.pipeline import (
+    PipelineResult,
+    _dedup_pairs,
+    cluster_table,
 )
-from autovalidate_backend_api_spark.plans.pipeline import PipelineResult, _dedup_pairs
 from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
 
 
@@ -163,14 +164,8 @@ def incremental_update(
     confirmed = ckpt.get_or_compute("confirmed_pairs", _confirmed)
 
     def _clusters():
-        vertices = keymap.select(F.col("id").alias("key")).distinct()
-        labels = connected_components(vertices, confirmed, cfg)
-        with_keys = labels.join(keymap, labels.key == keymap.id).select(
-            "key_str", F.col("cluster_rep").alias("comp")
-        )
-        reps = with_keys.groupBy("comp").agg(F.min("key_str").alias("rep_key"))
-        return with_keys.join(reps, "comp").select(
-            F.col("key_str").alias("key"), F.col("rep_key").alias("cluster_rep")
+        return cluster_table(
+            keymap, confirmed, cfg, ckpt.rows_of("confirmed_pairs")
         )
 
     clusters = ckpt.get_or_compute("clusters", _clusters)

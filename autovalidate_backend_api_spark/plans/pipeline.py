@@ -43,7 +43,7 @@ from autovalidate_backend_api_spark.operators import stage_a_exact as A
 from autovalidate_backend_api_spark.operators import stage_b_lsh as B
 from autovalidate_backend_api_spark.operators import stage_c_substring as C
 from autovalidate_backend_api_spark.operators.connected_components import (
-    connected_components,
+    component_labels,
 )
 from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
 
@@ -77,6 +77,35 @@ def _dedup_pairs(pairs: DataFrame) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+
+
+def cluster_table(
+    keymap: DataFrame,
+    confirmed: DataFrame,
+    cfg: PipelineConfig = PINNED,
+    n_edges: int | None = None,
+) -> DataFrame:
+    """keymap (id, key_str) + confirmed (src, dst) id edges →
+    (key, cluster_rep = min key_str of the key's component).
+
+    Only edge-TOUCHED ids (≤ 2·edges) are translated to keys: every
+    untouched keymap row is its own representative by identity, so the
+    full id table never enters a wide shuffle just to translate
+    singletons. The union-find labels arrive broadcast-hinted while
+    small (``component_labels``), which keeps both keymap joins
+    map-side; the representative is one window-min over the touched
+    rows.
+    """
+    labels = component_labels(confirmed, cfg, n_edges)
+    on = keymap.id == labels.key
+    touched = keymap.join(labels, on).select(
+        F.col("key_str").alias("key"),
+        F.min("key_str").over(Window.partitionBy("comp")).alias("cluster_rep"),
+    )
+    singles = keymap.join(labels, on, "left_anti").select(
+        F.col("key_str").alias("key"), F.col("key_str").alias("cluster_rep")
+    )
+    return touched.unionByName(singles)
 
 
 def run_pipeline(
@@ -152,7 +181,7 @@ def run_pipeline(
     )
     # coalesce (narrow, no shuffle): the keymap is probed by several
     # SMALL downstream jobs (the duplicate/collision check aggregation,
-    # two broadcast-join translations, the singleton anti-join) — cached
+    # the broadcast-join translation, the singleton anti-join) — cached
     # at the provider's input partitioning (128 at bench) every probe
     # pays a full wave of near-empty tasks (measured 1.76 s for one agg
     # over 49k cached rows; ~0.4 s at shuffle_partitions). The count is
@@ -285,67 +314,8 @@ def run_pipeline(
         # the materialization already counted confirmed_pairs (ephemeral
         # count / parquet manifest) — re-counting would be one more
         # driver-synchronized job for a number we have
-        n_edges = ckpt.rows_of("confirmed_pairs")
-        if n_edges is None:
-            n_edges = confirmed.count()
-        if cfg.cc_driver_max_edges > 0 and n_edges <= cfg.cc_driver_max_edges:
-            # small-edge-set fast path (the overwhelmingly common case —
-            # dup pairs ≪ corpus): solve CC with driver union-find and
-            # translate ids → keys with BROADCAST map-side joins over the
-            # persisted keymap. Only edge-TOUCHED vertices (≤ 2·edges)
-            # enter any join; every untouched file is its own
-            # representative by identity — no wide shuffle of the full
-            # 147k/10^12-row label table just to translate singletons.
-            from autovalidate_backend_api_spark.operators.connected_components import (
-                union_find_labels,
-            )
-
-            # Arrow collect: two flat int64 columns, not 2M Row objects
-            # (ADVICE r3 — the row-collect path was the real memory cost
-            # behind cc_driver_max_edges, not the "~32 MB of longs")
-            _edges_pd = confirmed.select("src", "dst").toPandas()
-            labeled = union_find_labels(
-                list(zip(_edges_pd["src"].tolist(), _edges_pd["dst"].tolist()))
-            )
-            if not labeled:
-                return keymap.select(
-                    F.col("key_str").alias("key"),
-                    F.col("key_str").alias("cluster_rep"),
-                )
-            t_labels = spark.createDataFrame(
-                labeled, "id bigint, comp bigint"
-            )
-            # broadcast only while the label table is actually small:
-            # near the 2M-edge dispatch cap it can reach ~4M rows
-            # (~64 MB serialized) — force-broadcasting that overrides
-            # autoBroadcastJoinThreshold and serializes through the
-            # driver (ADVICE r3). Past the bound, plain joins + AQE.
-            _bc = F.broadcast if len(labeled) <= 500_000 else (lambda df: df)
-            with_keys = keymap.join(_bc(t_labels), "id").select(
-                "key_str", "comp"
-            )
-            reps = with_keys.groupBy("comp").agg(F.min("key_str").alias("rep_key"))
-            multi = with_keys.join(_bc(reps), "comp").select(
-                F.col("key_str").alias("key"), F.col("rep_key").alias("cluster_rep")
-            )
-            singles = keymap.join(
-                _bc(t_labels.select("id")), "id", "left_anti"
-            ).select(
-                F.col("key_str").alias("key"), F.col("key_str").alias("cluster_rep")
-            )
-            return multi.unionByName(singles)
-        vertices = hashed.select("key").distinct()
-        # star fallback: an unattended 10^12-file backfill must not die
-        # on one deep containment chain — large-star/small-star finishes
-        # any diameter in O(log n) rounds
-        labels = connected_components(vertices, confirmed, cfg, on_exhaustion="star")
-        # translate ids → keys; representative = min key per component
-        with_keys = labels.join(
-            keymap, labels.key == keymap.id, "inner"
-        ).select("key_str", F.col("cluster_rep").alias("comp"))
-        reps = with_keys.groupBy("comp").agg(F.min("key_str").alias("rep_key"))
-        return with_keys.join(reps, "comp").select(
-            F.col("key_str").alias("key"), F.col("rep_key").alias("cluster_rep")
+        return cluster_table(
+            keymap, confirmed, cfg, ckpt.rows_of("confirmed_pairs")
         )
 
     clusters = timed(

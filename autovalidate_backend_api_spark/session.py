@@ -81,16 +81,3 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def tune_for_oracle(spark: SparkSession) -> None:
-    """Runtime confs safe to set on a driver-provided session.
-
-    The correctness driver builds its own SparkSession; these are the
-    runtime-settable keys that matter for DuckDB-oracle parity.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:
-        pass

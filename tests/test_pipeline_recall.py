@@ -4,6 +4,7 @@ invariant, golden cluster-assignment parity, and checkpoint resume."""
 
 from __future__ import annotations
 
+import json
 import shutil
 import tempfile
 
@@ -155,3 +156,51 @@ def test_outputs_do_not_depend_on_shuffle_partitions(spark, tmp_path):
     assert {r[-1] for r in pairs8} >= {"sha", "minhash", "substring"}
     assert clusters8 == clusters3
     assert pairs8 == pairs3
+
+
+def test_distributed_cluster_table_matches_checkpoint(spark, pipeline_run):
+    """The above-cap translation (large-star/small-star labels, then the
+    same id → key translation) reproduces the run's clusters exactly."""
+    import dataclasses
+
+    from autovalidate_backend_api_spark.config import PINNED
+    from autovalidate_backend_api_spark.plans.pipeline import cluster_table
+    from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
+
+    _, _, clusters, tmp = pipeline_run
+    mgr = CheckpointManager(spark, tmp, "pytest", PINNED.config_hash())
+    dist = dataclasses.replace(PINNED, cc_driver_max_edges=0)
+    got = cluster_table(mgr.read("keymap"), mgr.read("confirmed_pairs"), dist)
+    got = {r["key"]: r["cluster_rep"] for r in got.collect()}
+    assert got == clusters
+    assert any(k != rep for k, rep in got.items())
+
+
+def test_interrupted_run_resumes_to_same_outputs(spark, tmp_path):
+    """A run cut after a lost stage output and a torn clusters manifest
+    recomputes exactly those stages and yields the same clusters and
+    confirmed pairs."""
+    import os
+
+    corpus_df = spark.createDataFrame(C.corpus_pandas(60, seed=5))
+    base = str(tmp_path)
+
+    def run():
+        res = run_pipeline(spark, corpus_df, base, run_id="cut", verbose=False)
+        return (
+            {tuple(r) for r in res.clusters.collect()},
+            {tuple(r) for r in res.confirmed_pairs.collect()},
+        )
+
+    clusters, pairs = run()
+    shutil.rmtree(os.path.join(base, "cut", "stage_c_pairs"))
+    manifest = os.path.join(base, "cut", "clusters", "_manifest.json")
+    with open(manifest) as f:
+        text = f.read()
+    with open(manifest, "w") as f:
+        f.write(text[: len(text) // 2])
+    assert run() == (clusters, pairs)
+    # both damaged checkpoints were rewritten, not bypassed
+    assert os.path.exists(os.path.join(base, "cut", "stage_c_pairs", "_manifest.json"))
+    with open(manifest) as f:
+        assert json.load(f)["rows"] == len(clusters)
