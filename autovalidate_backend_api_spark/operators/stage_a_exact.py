@@ -86,16 +86,3 @@ def survivor_keys(
         reps = exact_reps(hashed)
     return reps.select(F.col("rep_key").alias("key"), "sha")
 
-
-def survivors(hashed: DataFrame) -> DataFrame:
-    """One representative row per distinct sha (the cascade gate P8).
-
-    min(key)-per-sha keeps the choice deterministic under any input
-    order — never rely on dropDuplicates' arbitrary pick (SURVEY.md A2).
-    """
-    reps = exact_reps(hashed).select("sha", "rep_key")
-    return (
-        hashed.join(reps, "sha")
-        .filter(F.col("key") == F.col("rep_key"))
-        .drop("rep_key")
-    )

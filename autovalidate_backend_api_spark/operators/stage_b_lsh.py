@@ -221,6 +221,11 @@ def verify_pairs(
     threshold and AQE falls back to the spillable sort-merge join on
     its own; the fat signature side is never force-broadcast (its
     cached-statistics size is accurate, ≫ the 64 MB threshold).
+    Caveat: AQE compares a side's *compressed* shuffle bytes to that
+    threshold, so at an intermediate scale a side just under it can
+    deserialize to several times the size AQE compared (the shingle
+    arrays compress well) — the broadcast build then costs that much
+    more driver and executor memory than the threshold suggests.
     """
     src_sig = sigs.select(
         F.col("key").alias("src"),

@@ -3,8 +3,12 @@
 The reference's feedback loop persists every confirmed correction and
 consults it before doing any expensive work on the next request
 (/root/reference/app/api/core/db_lookup.py:52-83 write, :24-50 read).
-Batch reframing: a completed run's checkpoints (signatures +
-confirmed_pairs) are the "known pairs cache"; an incremental update
+Batch reframing: a completed run's checkpoints are the "known pairs
+cache". A fold reads four of its parent's checkpoints: ``keymap``
+(id → key_str), ``stage_a_survivors`` (one (key, sha) row per distinct
+content), ``signatures`` and ``confirmed_pairs``. It writes the same
+four for its own run — each the parent's rows plus the increment's — so
+a fold can be the parent of the next fold. An incremental update
 
 1. signs ONLY the new files (the expensive Arrow pass is proportional
    to the increment, not the corpus),
@@ -39,14 +43,27 @@ from autovalidate_backend_api_spark.functions.signatures import (
     sha256_col,
     with_signatures,
 )
+from autovalidate_backend_api_spark.operators import stage_a_exact as A
 from autovalidate_backend_api_spark.operators import stage_b_lsh as B
 from autovalidate_backend_api_spark.operators import stage_c_substring as C
 from autovalidate_backend_api_spark.plans.pipeline import (
+    SIGNATURE_COLUMNS,
     PipelineResult,
     _dedup_pairs,
     cluster_table,
 )
 from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
+
+
+def _touching(cands: DataFrame, new_keys: DataFrame) -> DataFrame:
+    """The (src, dst) candidates with at least one endpoint in ``new_keys``
+    (old×old pairs are already known — a new-touched bucket still pairs
+    its old members with each other)."""
+    return (
+        cands.join(new_keys.withColumnRenamed("key", "src"), "src", "left_semi")
+        .unionByName(cands.join(new_keys.withColumnRenamed("key", "dst"), "dst", "left_semi"))
+        .dropDuplicates(["src", "dst"])
+    )
 
 
 def incremental_update(
@@ -78,38 +95,31 @@ def incremental_update(
 
     # Stage A across the union of sha tables: a new file exactly equal to
     # an old one links to the old representative (the Redis-hit analog).
-    def _sha_edges():
-        from autovalidate_backend_api_spark.operators import stage_a_exact as A
+    # One reps aggregation serves the pairs and the survivors (as in
+    # run_pipeline).
+    new_sha = new_hashed.select("key", "sha")
+    all_sha = old_sha.unionByName(new_sha)
+    reps = A.exact_reps(all_sha).persist()
+    sha_pairs = ckpt.get_or_compute(
+        "stage_a_pairs", lambda: A.exact_pairs(all_sha, reps=reps)
+    )
+    # min key per sha over parent ∪ increment — what a from-scratch run
+    # writes, and the table the next fold reads as its ``old_sha``
+    survivors = ckpt.get_or_compute(
+        "stage_a_survivors", lambda: A.survivor_keys(reps=reps)
+    )
 
-        new_sha = new_hashed.select("key", "sha")
-        all_sha = old_sha.unionByName(new_sha)
-        reps = A.exact_reps(all_sha).filter(F.col("n") > 1)
-        return (
-            all_sha.join(reps, "sha")
-            .filter(F.col("key") != F.col("rep_key"))
-            .select(
-                F.col("rep_key").alias("src"),
-                F.col("key").alias("dst"),
-                F.lit("sha").alias("stage"),
-                F.lit(1.0).alias("score"),
-            )
-        )
-
-    sha_pairs = ckpt.get_or_compute("stage_a_pairs", _sha_edges)
-
-    # sign only genuinely new content (anti-join on sha = the cache gate)
-    def _new_sigs():
-        from autovalidate_backend_api_spark.operators import stage_a_exact as A
-
-        fresh = A.survivors(  # deterministic min-key rep per new sha
+    # sign only content the parent has not signed (anti-join on sha = the
+    # cache gate), one survivor row per new sha
+    new_sigs = ckpt.get_or_compute(
+        "signatures_new",
+        lambda: with_signatures(
             new_hashed.join(old_sha.select("sha"), "sha", "left_anti")
-        )
-        return with_signatures(fresh, cfg, include_winnow=True).select(
-            "key", "norm", "shingles", "bands_tok", "bands_chr",
-            "n_shingles", "simhash", "winnow",
-        )
-
-    new_sigs = ckpt.get_or_compute("signatures_new", _new_sigs)
+            .join(survivors, ["key", "sha"], "left_semi"),
+            cfg,
+            include_winnow=True,
+        ).select(*SIGNATURE_COLUMNS),
+    )
     all_sigs = ckpt.get_or_compute(
         "signatures", lambda: old_sigs.unionByName(new_sigs)
     )
@@ -122,15 +132,7 @@ def incremental_update(
         # caps/shared-counts for every pair touching a new key)
         touched = B.explode_bands(new_sigs).select("bucket").distinct()
         cands, _dropped = B.candidate_pairs(all_sigs, cfg, bucket_filter=touched)
-        # keep only pairs touching a new file (old×old already known —
-        # a new-touched bucket still pairs its old members with each other)
-        touching_new = cands.join(
-            new_keys.withColumnRenamed("key", "src"), "src", "left_semi"
-        ).unionByName(
-            cands.join(new_keys.withColumnRenamed("key", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-        ).dropDuplicates(["src", "dst"])
-        return B.verify_pairs(touching_new, all_sigs, cfg)
+        return B.verify_pairs(_touching(cands, new_keys), all_sigs, cfg)
 
     b_pairs = ckpt.get_or_compute("stage_b_pairs", _stage_b)
 
@@ -139,13 +141,7 @@ def incremental_update(
             F.explode("winnow").alias("fp")
         ).distinct()
         cands, _dropped = C.fingerprint_candidates(all_sigs, cfg, fp_filter=touched_fp)
-        touching_new = cands.join(
-            new_keys.withColumnRenamed("key", "src"), "src", "left_semi"
-        ).unionByName(
-            cands.join(new_keys.withColumnRenamed("key", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-        ).dropDuplicates(["src", "dst"])
-        return C.verify_containment(touching_new, all_sigs, cfg)
+        return C.verify_containment(_touching(cands, new_keys), all_sigs, cfg)
 
     c_pairs = ckpt.get_or_compute("stage_c_pairs", _stage_c)
 

@@ -47,6 +47,12 @@ from autovalidate_backend_api_spark.operators.connected_components import (
 )
 from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
 
+# columns of the checkpointed ``signatures`` table (batch and fold)
+SIGNATURE_COLUMNS = (
+    "key", "norm", "shingles", "bands_tok", "bands_chr",
+    "n_shingles", "simhash", "winnow",
+)
+
 
 @dataclass
 class PipelineResult:
@@ -242,11 +248,7 @@ def run_pipeline(
                 .repartition("key"),
                 cfg,
                 include_winnow=True,
-            )
-            .select(
-                "key", "norm", "shingles", "bands_tok", "bands_chr",
-                "n_shingles", "simhash", "winnow",
-            ),
+            ).select(*SIGNATURE_COLUMNS),
         ),
     )
 

@@ -5,12 +5,11 @@ Redis + the ``typo_training_dataset`` table
 (/root/reference/app/api/core/db_lookup.py:52-83) — confirmed state
 survives the process and short-circuits future work.
 
-Production target is Iceberg (atomic snapshot commits; ``writeTo(...)
-.append()`` / ``overwritePartitions()``); the Iceberg runtime jar is not
-in this sandbox, so the default backend is parquet directories with
-Spark's atomic ``_SUCCESS`` marker plus a JSON manifest carrying the
-config hash and row count (lineage). The interface is identical either
-way; `ICEBERG_DDL` documents the production DDL.
+One backend: parquet directories with Spark's atomic ``_SUCCESS``
+marker plus a JSON manifest carrying the config hash and per-file row
+counts (lineage). Iceberg (atomic snapshot commits, ``writeTo(...)
+.append()``) remains the production target in the design only; no code
+path here writes it.
 
 Resume semantics: a stage is skipped iff its checkpoint exists AND was
 written under the same pipeline-config hash — a config change invalidates
@@ -24,28 +23,6 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-
-ICEBERG_DDL = {
-    "corpus": """
-        CREATE TABLE IF NOT EXISTS {catalog}.dedup.corpus (
-          repo string, path string, commit string, lang string, content string)
-        USING iceberg PARTITIONED BY (bucket(512, repo))""",
-    "confirmed_pairs": """
-        CREATE TABLE IF NOT EXISTS {catalog}.dedup.confirmed_pairs (
-          src string, dst string, jaccard double, hamming int,
-          stage string, run_id string)
-        USING iceberg PARTITIONED BY (stage)""",
-    "clusters": """
-        CREATE TABLE IF NOT EXISTS {catalog}.dedup.clusters (
-          key string, cluster_rep string, run_id string)
-        USING iceberg""",
-    "stage_metrics": """
-        CREATE TABLE IF NOT EXISTS {catalog}.dedup.stage_metrics (
-          run_id string, stage string, partition_id int,
-          rows_out long, wall_ms long)
-        USING iceberg PARTITIONED BY (run_id)""",
-}
-
 
 def _fs_for(path: str):
     """(pyarrow FileSystem, scheme-stripped path) for local or remote URIs."""
@@ -141,86 +118,6 @@ def parquet_metadata_fingerprint(path: str) -> str:
     return hashlib.sha256(repr(entries).encode()).hexdigest()[:12]
 
 
-def iceberg_available(spark: SparkSession, catalog: str) -> bool:
-    """Capability probe: is ``catalog`` configured as a Spark catalog?
-
-    True iff ``spark.sql.catalog.<catalog>`` is set (the way every
-    Iceberg deployment registers its catalog impl). Does NOT validate
-    that the Iceberg runtime jar is on the classpath — the first
-    ``writeTo`` raises loudly if it isn't, which is the behavior we
-    want (never silently fall back to a different table format).
-    """
-    try:
-        return spark.conf.get(f"spark.sql.catalog.{catalog}") is not None
-    except Exception:
-        return False
-
-
-class IcebergTableIO:
-    """The real DataFrameWriterV2 call sequences against an Iceberg
-    catalog (VERDICT r3 next-round #7): table DDL, snapshot-atomic
-    ``append`` (S8 row append), and ``overwritePartitions`` (S6/S7
-    idempotent upsert — re-running a stage replaces exactly the
-    partitions it produces, the MERGE-free idempotency pattern).
-
-    The sandbox has no Iceberg runtime jar, so these paths are executed
-    in CI against a mock writer (tests/test_relational.py) — the point
-    is that the call SEQUENCE is real code that has run, not DDL-as-docs
-    (VERDICT r2/r3 "What's missing" #1). On a cluster:
-    ``spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog``
-    plus warehouse/catalog-impl config makes the probe pass.
-
-    Namespace requirement: a freshly-configured Iceberg catalog has NO
-    ``dedup`` namespace, and every writeTo/DDL here targets
-    ``<catalog>.dedup.<table>`` — the first write against a real catalog
-    would fail with NoSuchNamespaceException. Every write/DDL entry
-    point therefore issues ``CREATE NAMESPACE IF NOT EXISTS`` first
-    (memoized — one statement per IO instance, idempotent on the
-    catalog side).
-    """
-
-    def __init__(self, spark: SparkSession, catalog: str = "dedup_cat"):
-        if not iceberg_available(spark, catalog):
-            raise RuntimeError(
-                f"Iceberg catalog '{catalog}' is not configured — set "
-                f"spark.sql.catalog.{catalog} (and its warehouse) to use "
-                "backend='iceberg'; the parquet backend needs no catalog"
-            )
-        self.spark = spark
-        self.catalog = catalog
-        self._namespace_ready = False
-
-    def ensure_namespace(self) -> None:
-        """Idempotent ``CREATE NAMESPACE IF NOT EXISTS <catalog>.dedup``.
-
-        Called lazily before the first write/DDL; a real Iceberg catalog
-        rejects writes into a namespace that was never created.
-        """
-        if not self._namespace_ready:
-            self.spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {self.catalog}.dedup")
-            self._namespace_ready = True
-
-    def ensure_table(self, name: str) -> None:
-        """Idempotent DDL from ICEBERG_DDL (S11 versioned-artifact gate)."""
-        self.ensure_namespace()
-        self.spark.sql(ICEBERG_DDL[name].format(catalog=self.catalog))
-
-    def qualified(self, name: str) -> str:
-        return f"{self.catalog}.dedup.{name}"
-
-    def append(self, name: str, df: DataFrame) -> None:
-        self.ensure_namespace()
-        df.writeTo(self.qualified(name)).append()
-
-    def overwrite_partitions(self, name: str, df: DataFrame) -> None:
-        self.ensure_namespace()
-        df.writeTo(self.qualified(name)).overwritePartitions()
-
-    def create_or_replace(self, name: str, df: DataFrame) -> None:
-        self.ensure_namespace()
-        df.writeTo(self.qualified(name)).using("iceberg").createOrReplace()
-
-
 def export_clusters_json(df: DataFrame, path: str) -> None:
     """S10 — distributed Spark JSON sink for the cluster map.
 
@@ -235,31 +132,16 @@ def export_clusters_json(df: DataFrame, path: str) -> None:
 class CheckpointManager:
     """Stage checkpoints under ``base_dir/run_id/stage``.
 
-    ``backend="parquet"`` (default): parquet directories + _SUCCESS +
-    JSON manifest. ``backend="iceberg"``: stage outputs land in
-    run-scoped Iceberg tables (``<catalog>.dedup.<run_id>_<stage>``)
-    via the real DataFrameWriterV2 sequence — snapshot-atomic commits,
-    no _SUCCESS-marker protocol needed; the local JSON manifest still
-    carries the config hash so resume invalidation is backend-uniform.
+    Each stage is a parquet directory (``data``, committed by Spark's
+    ``_SUCCESS`` marker) plus a JSON manifest holding the config hash
+    that gates resume and the per-file row counts.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_dir: str,
-        run_id: str,
-        config_hash: str,
-        backend: str = "parquet",
-        catalog: str = "dedup_cat",
-    ):
-        if backend not in ("parquet", "iceberg"):
-            raise ValueError(backend)
+    def __init__(self, spark: SparkSession, base_dir: str, run_id: str, config_hash: str):
         self.spark = spark
         self.base_dir = base_dir
         self.run_id = run_id
         self.config_hash = config_hash
-        self.backend = backend
-        self._iceberg = IcebergTableIO(spark, catalog) if backend == "iceberg" else None
 
     def _stage_dir(self, stage: str) -> str:
         return os.path.join(self.base_dir, self.run_id, stage)
@@ -286,16 +168,13 @@ class CheckpointManager:
         per-partition lineage) read from the PARQUET FOOTERS — metadata
         only, no second scan of the data (VERDICT r1 "What's wrong" #4:
         the old groupBy(spark_partition_id) re-read every checkpoint
-        once per stage). On Iceberg the snapshot summary carries these
-        counts natively; on a remote object store this is one footer
+        once per stage). On a remote object store this is one footer
         GET per file — file listing goes through pyarrow.fs, which
         resolves s3://, hdfs:// and local paths alike (a bare
         glob.glob here would silently return [] on remote schemes and
         record rows=0 lineage — the failure mode is loud now: a write
         whose _SUCCESS marker can't be found raises).
         """
-        if self.backend == "iceberg":
-            return self._write_iceberg(stage, df)
         path = os.path.join(self._stage_dir(stage), "data")
         t0 = time.monotonic()
         df.write.mode("overwrite").parquet(path)
@@ -315,34 +194,7 @@ class CheckpointManager:
             json.dump(manifest, f)
         return out
 
-    def _iceberg_table(self, stage: str) -> str:
-        # run-scoped stage tables; Iceberg table names allow [a-z0-9_]
-        safe_run = "".join(c if c.isalnum() else "_" for c in self.run_id)
-        return f"{safe_run}_{stage}"
-
-    def _write_iceberg(self, stage: str, df: DataFrame) -> DataFrame:
-        t0 = time.monotonic()
-        name = self._iceberg_table(stage)
-        # createOrReplace = one atomic snapshot swap (idempotent re-run
-        # of a stage replaces its whole output — the S6 upsert contract)
-        self._iceberg.create_or_replace(name, df)
-        out = self.spark.table(self._iceberg.qualified(name))
-        manifest = {
-            "run_id": self.run_id,
-            "stage": stage,
-            "config_hash": self.config_hash,
-            "backend": "iceberg",
-            "table": self._iceberg.qualified(name),
-            "wall_ms": int((time.monotonic() - t0) * 1000),
-        }
-        os.makedirs(self._stage_dir(stage), exist_ok=True)
-        with open(self._manifest_path(stage), "w") as f:
-            json.dump(manifest, f)
-        return out
-
     def read(self, stage: str) -> DataFrame:
-        if self.backend == "iceberg":
-            return self.spark.table(self._iceberg.qualified(self._iceberg_table(stage)))
         return self.spark.read.parquet(os.path.join(self._stage_dir(stage), "data"))
 
     def manifest(self, stage: str) -> dict:
@@ -351,8 +203,7 @@ class CheckpointManager:
 
     def rows_of(self, stage: str) -> int | None:
         """Row count from the stage manifest — metadata only, no job.
-        None when unknown (iceberg backend records no count; the table
-        snapshot carries it natively there). A missing OR unreadable
+        None when unknown: a missing OR unreadable
         (truncated/corrupt JSON → ValueError) manifest degrades to None
         so callers fall back to a recount instead of crashing."""
         try:

@@ -148,60 +148,9 @@ def compaction_plan_oracle_sql(
     FROM cb GROUP BY 1, 2"""
 
 
-def execute_compaction(
-    files: DataFrame,
-    *,
-    partition: str,
-    file_id: str,
-    size_col: str,
-    target_bytes: int,
-    path: str,
-) -> DataFrame:
-    """Apply :func:`compaction_plan`: rewrite the rows so each planned
-    bin lands in exactly ONE output parquet file under
-    ``path/<partition>=<v>/``.
-
-    The plan's bin assignment is recomputed inline (same window — the
-    plan is deterministic, so plan-then-execute and execute-directly
-    agree; the gate pins the PLAN, the test here pins the file layout).
-    One-file-per-bin comes from ``repartition(partition, bin)`` +
-    in-task ``partitionBy`` write: every (partition, bin) group is
-    co-located in one task, so each bin directory receives one part
-    file per bin it owns. The shuffle moves each row once — the same
-    cost profile as Iceberg's binpack rewrite action.
-
-    Returns the bin manifest (what compaction_plan would return) for
-    the caller to commit alongside the rewrite.
-    """
-    w = (
-        Window.partitionBy(partition)
-        .orderBy(file_id)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    before = F.coalesce(F.sum(size_col).over(w), F.lit(0)).cast("bigint")
-    binned = files.withColumn("_before", before).withColumn(
-        "_bin", F.expr(f"_before div {int(target_bytes)}")
-    )
-    (
-        binned.repartition(F.col(partition), F.col("_bin"))
-        .drop("_before")
-        .write.mode("overwrite")
-        .partitionBy(partition, "_bin")
-        .parquet(path)
-    )
-    return compaction_plan(
-        files,
-        partition=partition,
-        file_id=file_id,
-        size_col=size_col,
-        target_bytes=target_bytes,
-    )
-
-
 # --- rendezvous (highest-random-weight) sharding -----------------------
 #
-# The shard-routing primitive under every incremental-state operator in
-# this repo (plans/incremental.py state tables, streaming sink buckets):
+# A shard-routing primitive for incremental state tables:
 # key k goes to argmax_s md5("hrw:" || s || ":" || k) — when a shard is
 # added or removed, ONLY the keys whose argmax was that shard move
 # (Thaler & Ravishankar 1998), unlike k % N where nearly every key

@@ -10,40 +10,89 @@ import tempfile
 import pytest
 
 from autovalidate_backend_api_spark import corpus as C
+from autovalidate_backend_api_spark.config import PINNED
 from autovalidate_backend_api_spark.plans.incremental import incremental_update
-from autovalidate_backend_api_spark.plans.pipeline import run_pipeline
+from autovalidate_backend_api_spark.plans.pipeline import (
+    SIGNATURE_COLUMNS,
+    run_pipeline,
+)
+from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
 
 N_BASE = 120
+COLS = ["repo", "path", "commit", "lang", "content"]
 
 
 @pytest.fixture(scope="module")
-def split_corpora(spark):
-    full = C.corpus_pandas(N_BASE, with_meta=True)
+def full_pd():
+    return C.corpus_pandas(N_BASE, with_meta=True)
+
+
+@pytest.fixture(scope="module")
+def split_corpora(spark, full_pd):
     # split by base_id: first 80 bases = initial corpus, rest = increment
-    cols = ["repo", "path", "commit", "lang", "content"]
-    old = full[full.base_id < 80][cols]
-    new = full[full.base_id >= 80][cols]
+    old = full_pd[full_pd.base_id < 80][COLS]
+    new = full_pd[full_pd.base_id >= 80][COLS]
     return (
-        spark.createDataFrame(full[cols]),
+        spark.createDataFrame(full_pd[COLS]),
         spark.createDataFrame(old),
         spark.createDataFrame(new),
     )
 
 
-def test_incremental_matches_scratch(spark, split_corpora):
-    union_df, old_df, new_df = split_corpora
+def _survivors(spark, tmp: str, run_id: str) -> set:
+    mgr = CheckpointManager(spark, tmp, run_id, PINNED.config_hash())
+    return {(r.key, r.sha) for r in mgr.read("stage_a_survivors").collect()}
+
+
+@pytest.fixture(scope="module")
+def scratch(spark, split_corpora):
+    """(key → cluster_rep, Stage A survivors) of one from-scratch run
+    over the whole corpus."""
+    tmp = tempfile.mkdtemp(prefix="av_incr_scratch_")
+    try:
+        res = run_pipeline(spark, split_corpora[0], tmp, "full")
+        clusters = {r["key"]: r["cluster_rep"] for r in res.clusters.collect()}
+        return clusters, _survivors(spark, tmp, "full")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_incremental_matches_scratch(spark, split_corpora, scratch):
+    _, old_df, new_df = split_corpora
     tmp = tempfile.mkdtemp(prefix="av_incr_")
     try:
-        scratch = run_pipeline(spark, union_df, f"{tmp}/scratch", "full")
-        expected = {
-            r["key"]: r["cluster_rep"] for r in scratch.clusters.collect()
-        }
-        run_pipeline(spark, old_df, f"{tmp}/incr", "base")
+        run_pipeline(spark, old_df, tmp, "base")
         incr = incremental_update(
-            spark, new_df, f"{tmp}/incr", prev_run_id="base", run_id="upd"
+            spark, new_df, tmp, prev_run_id="base", run_id="upd"
         )
         got = {r["key"]: r["cluster_rep"] for r in incr.clusters.collect()}
-        assert got == expected
+        assert got == scratch[0]
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_fold_on_fold_matches_scratch(spark, full_pd, scratch):
+    """base → fold → fold: a fold's checkpoints are a valid parent for
+    the next fold, and the chain ends at the from-scratch clusters. The
+    second fold also carries variants (exact copies among them) of files
+    that the base run and the first fold hold, so it matches against the
+    first fold's Stage A survivors, which must equal a scratch run's."""
+    b = full_pd.base_id
+    late_variant = b.between(70, 99) & (full_pd.slot >= 1)
+    parts = [
+        full_pd[(b < 80) & ~late_variant],
+        full_pd[b.between(80, 99) & ~late_variant],
+        full_pd[(b >= 100) | late_variant],
+    ]
+    base_df, fold1_df, fold2_df = (spark.createDataFrame(p[COLS]) for p in parts)
+    tmp = tempfile.mkdtemp(prefix="av_incr_chain_")
+    try:
+        run_pipeline(spark, base_df, tmp, "base")
+        incremental_update(spark, fold1_df, tmp, prev_run_id="base", run_id="f1")
+        incr = incremental_update(spark, fold2_df, tmp, prev_run_id="f1", run_id="f2")
+        got = {r["key"]: r["cluster_rep"] for r in incr.clusters.collect()}
+        assert got == scratch[0]
+        assert _survivors(spark, tmp, "f2") == scratch[1]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -56,7 +105,6 @@ def test_candidate_generation_is_increment_proportional(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from autovalidate_backend_api_spark.config import PINNED
     from autovalidate_backend_api_spark.functions.signatures import (
         file_key_col,
         sha256_col,
@@ -77,9 +125,9 @@ def test_candidate_generation_is_increment_proportional(spark):
             sha256_col(F.col("content")).alias("sha"),
             "content",
         ).select(F.xxhash64("key_str").alias("key"), "sha", "content")
-        return with_signatures(A.survivors(keyed), PINNED, include_winnow=True).select(
-            "key", "norm", "shingles", "bands_tok", "bands_chr",
-            "n_shingles", "simhash", "winnow",
+        survivors = keyed.join(A.survivor_keys(keyed), ["key", "sha"], "left_semi")
+        return with_signatures(survivors, PINNED, include_winnow=True).select(
+            *SIGNATURE_COLUMNS
         )
 
     all_sigs = _sigs(union_pd).cache()
@@ -140,11 +188,6 @@ def test_increment_signs_only_new_content(spark, split_corpora):
     try:
         run_pipeline(spark, old_df, tmp, "base")
         incremental_update(spark, new_df, tmp, prev_run_id="base", run_id="upd")
-        from autovalidate_backend_api_spark.sources.checkpoint import (
-            CheckpointManager,
-        )
-        from autovalidate_backend_api_spark.config import PINNED
-
         mgr = CheckpointManager(spark, tmp, "upd", PINNED.config_hash())
         n_new_sigs = mgr.manifest("signatures_new")["rows"]
         assert n_new_sigs <= new_df.count()

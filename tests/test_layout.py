@@ -137,36 +137,6 @@ def test_phrase_gate_nonvacuous_at_sf0001(spark, sf_dir):
     assert entrypoints.queries()["phrase_search_hits"](spark, sf_dir).count() > 0
 
 
-def test_execute_compaction_one_file_per_bin(spark, tmp_path):
-    """The rewrite places each planned bin in exactly one parquet part
-    file, and the rewritten rows equal the input rows."""
-    import glob
-    import os
-
-    from autovalidate_backend_api_spark.sources.layout import execute_compaction
-
-    rows = [("p1", i, 400, f"c{i}") for i in range(10)] + [
-        ("p2", i, 999, f"d{i}") for i in range(3)
-    ]
-    df = spark.createDataFrame(rows, "part string, fid long, sz long, payload string")
-    out = str(tmp_path / "compacted")
-    plan = execute_compaction(
-        df, partition="part", file_id="fid", size_col="sz",
-        target_bytes=1000, path=out,
-    ).collect()
-    for r in plan:
-        bin_dir = os.path.join(out, f"part={r['part']}", f"_bin={r['bin']}")
-        parts = glob.glob(os.path.join(bin_dir, "part-*.parquet"))
-        assert len(parts) == 1, (bin_dir, parts)
-    back = spark.read.parquet(out)
-    assert {(r.fid, r.payload) for r in back.collect()} == {
-        (r[1], r[3]) for r in rows
-    }
-    # bins respect the target: p1 accumulates 400s -> bins of <=3 files
-    p1 = {r["bin"]: r["n_files"] for r in plan if r["part"] == "p1"}
-    assert all(n <= 3 for n in p1.values()) and sum(p1.values()) == 10
-
-
 def test_hrw_minimal_disruption_and_balance(spark):
     """The rendezvous property: dropping shard 7 (n_shards 8 → 7) moves
     ONLY the keys that were on shard 7; every other key keeps its shard.

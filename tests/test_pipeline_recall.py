@@ -125,6 +125,22 @@ def test_config_change_invalidates_checkpoints(spark, pipeline_run):
     assert mgr_same.exists("stage_b_pairs")
 
 
+def test_rows_of_tolerates_corrupt_manifest(spark, tmp_path):
+    """A missing or truncated manifest degrades rows_of() to None (the
+    caller falls back to a recount) instead of raising."""
+    import os
+
+    from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
+
+    ckpt = CheckpointManager(spark, str(tmp_path), "run-x", "cfg")
+    assert ckpt.rows_of("nope") is None  # missing → None (OSError path)
+    stage_dir = os.path.join(str(tmp_path), "run-x", "confirmed_pairs")
+    os.makedirs(stage_dir)
+    with open(os.path.join(stage_dir, "_manifest.json"), "w") as f:
+        f.write('{"rows": 12')  # truncated write
+    assert ckpt.rows_of("confirmed_pairs") is None
+
+
 def test_outputs_do_not_depend_on_shuffle_partitions(spark, tmp_path):
     """The keyed exchanges (signatures, Stage B bands, Stage C
     fingerprints) take their partition count from the session, so AQE
