@@ -39,23 +39,20 @@ def exact_reps(hashed: DataFrame, salt_buckets: int = SALT_BUCKETS) -> DataFrame
     )
 
 
-def exact_pairs(hashed: DataFrame, reps: DataFrame | None = None) -> DataFrame:
+def exact_pairs(hashed: DataFrame, reps: DataFrame) -> DataFrame:
     """Star edges (rep_key → member) for every sha group with n > 1.
 
     Emitting member↔representative (not all O(n²) member pairs) keeps
     the edge count linear in group size; connected components restores
     the full cluster. Columns: src, dst, stage, score.
 
-    ``reps`` lets a caller that also needs ``survivor_keys`` pass ONE
-    shared ``exact_reps`` frame (persist it) instead of paying the
-    sha-aggregation pass twice — the pipeline does (r6: Stage A ran the
-    full sha256 scan + two-phase agg once for the pair stage and again
-    for the survivor stage; sharing the reps frame removes a whole
-    corpus pass).
+    ``reps`` is the ``exact_reps`` frame of ``hashed``, shared with
+    ``survivor_keys`` (persist it) so the sha aggregation runs once per
+    run (r6: Stage A ran the full sha256 scan + two-phase agg once for
+    the pair stage and again for the survivor stage).
     """
-    reps = (reps if reps is not None else exact_reps(hashed)).filter(F.col("n") > 1)
     return (
-        hashed.join(reps, "sha")
+        hashed.join(reps.filter(F.col("n") > 1), "sha")
         .filter(F.col("key") != F.col("rep_key"))
         .select(
             F.col("rep_key").alias("src"),
@@ -66,23 +63,16 @@ def exact_pairs(hashed: DataFrame, reps: DataFrame | None = None) -> DataFrame:
     )
 
 
-def survivor_keys(
-    hashed: DataFrame | None = None, reps: DataFrame | None = None
-) -> DataFrame:
+def survivor_keys(reps: DataFrame) -> DataFrame:
     """(key, sha) of the representative row per distinct sha — CONTENT-FREE.
 
-    The salted two-phase aggregation already yields the min key per sha,
-    so the survivor set needs no join at all — and, critically, no
-    shuffle of the fat ``content`` column (the r2 shape shuffled every
-    surviving document's bytes by sha here, then AGAIN by key for the
-    signature stage; content now flows through exactly one exchange, the
-    signature stage's repartition-by-key). Callers recover content with
-    a semi-join against the already-cached corpus on ``key``.
-
-    ``reps`` (a shared ``exact_reps`` frame) turns this into a pure
-    projection — see ``exact_pairs``.
+    The salted two-phase aggregation (``exact_reps``) already yields the
+    min key per sha, so the survivor set is a projection of it: no join
+    and, critically, no shuffle of the fat ``content`` column (the r2
+    shape shuffled every surviving document's bytes by sha here, then
+    AGAIN by key for the signature stage; content now flows through
+    exactly one exchange, the signature stage's repartition-by-key).
+    Callers recover content with a semi-join against the already-cached
+    corpus on ``key``.
     """
-    if reps is None:
-        reps = exact_reps(hashed)
     return reps.select(F.col("rep_key").alias("key"), "sha")
-

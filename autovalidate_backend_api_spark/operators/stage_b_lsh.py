@@ -123,9 +123,9 @@ def candidate_pairs(
     O(buckets · cap²).
 
     ``bucket_filter`` (one ``bucket`` column) restricts generation to
-    those buckets via a semi-join BEFORE the bucket exchange — the
-    incremental path (plans/incremental.py) passes the increment's
-    touched buckets so the shuffle and in-bucket pair expansion are
+    those buckets via a semi-join BEFORE the bucket exchange — a fold
+    (``plans/pipeline.py::run_plan`` with a parent run) passes the
+    increment's touched buckets so the shuffle and in-bucket pair expansion are
     increment-proportional, not corpus-proportional (VERDICT r4 #2).
     Semantics contract: the restriction keeps every member of each
     retained bucket, so bucket sizes, hot-bucket drops, and per-pair

@@ -23,6 +23,11 @@ with a first-stage-wins window (SURVEY.md A2).
 
 Every stage output is an idempotent checkpoint commit; re-running the
 same (run_id, config) skips completed stages (north_rule resumability).
+
+One plan serves both entry points: ``run_pipeline`` is ``run_plan``
+with no parent, and ``plans/incremental.py``'s fold is ``run_plan``
+with a completed run as parent — search is the join restricted to the
+probes of the new side, not a second cascade.
 """
 
 from __future__ import annotations
@@ -52,6 +57,9 @@ SIGNATURE_COLUMNS = (
     "key", "norm", "shingles", "bands_tok", "bands_chr",
     "n_shingles", "simhash", "winnow",
 )
+
+# the stages a fold reads from its parent and writes as parent ∪ increment
+PARENT_TABLES = ("keymap", "stage_a_survivors", "signatures", "confirmed_pairs")
 
 
 @dataclass
@@ -114,6 +122,20 @@ def cluster_table(
     return touched.unionByName(singles)
 
 
+def _touching(cands: DataFrame, new_keys: DataFrame | None) -> DataFrame:
+    """The (src, dst) candidates with at least one endpoint in ``new_keys``
+    (old×old pairs are already known — a new-touched bucket still pairs
+    its old members with each other); every candidate when there is no
+    parent run (``new_keys`` None)."""
+    if new_keys is None:
+        return cands
+    return (
+        cands.join(new_keys.withColumnRenamed("key", "src"), "src", "left_semi")
+        .unionByName(cands.join(new_keys.withColumnRenamed("key", "dst"), "dst", "left_semi"))
+        .dropDuplicates(["src", "dst"])
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     corpus: DataFrame,
@@ -122,10 +144,37 @@ def run_pipeline(
     cfg: PipelineConfig = PINNED,
     verbose: bool = True,
 ) -> PipelineResult:
-    """checkpoint_dir=None disables durable checkpoints (bench mode):
+    """From-scratch run: ``run_plan`` with no parent.
+
+    checkpoint_dir=None disables durable checkpoints (bench mode):
     stage outputs are persisted in memory/disk cache instead — same
     dataflow, no resumability. verbose=False skips the dropped-bucket
-    count actions (two extra Spark jobs) for benchmarking.
+    count actions for benchmarking: six Spark jobs, three in each of
+    Stage B and Stage C (each ``dropped.count()`` re-runs its stage's
+    exchange)."""
+    return run_plan(spark, corpus, checkpoint_dir, run_id, cfg, verbose)
+
+
+def run_plan(
+    spark: SparkSession,
+    corpus: DataFrame,
+    checkpoint_dir: str | None,
+    run_id: str,
+    cfg: PipelineConfig,
+    verbose: bool,
+    parent_run_id: str | None = None,
+) -> PipelineResult:
+    """The one Stage A→D plan, for a from-scratch run and for a fold.
+
+    With ``parent_run_id`` (a completed run under the same
+    ``checkpoint_dir`` and config) ``corpus`` is an increment folded
+    into that run's state (``plans/incremental.py``). Each stage then
+    differs by one guard: ``keymap``, ``stage_a_survivors``,
+    ``signatures`` and ``confirmed_pairs`` carry the parent's rows too;
+    only content the parent has not signed is signed (written as
+    ``signatures_new``); Stage B and C generate candidates only from the
+    buckets and fingerprints of the new signatures and keep only pairs
+    touching a new key. Without a parent every guard is a no-op.
 
     Stages materialize SEQUENTIALLY — deliberate, measured (r4): driver-
     thread concurrency for the independent branches (keymap ∥ Stage-A
@@ -140,15 +189,6 @@ def run_pipeline(
     independent stages is still the right expectation; revisit there
     (scheduler pools), not here."""
     metrics: list[dict] = []
-
-    def timed(stage: str, fn):
-        t0 = time.monotonic()
-        out = fn()
-        metrics.append(
-            {"run_id": run_id, "stage": stage,
-             "wall_ms": int((time.monotonic() - t0) * 1000)}
-        )
-        return out
 
     if checkpoint_dir is None:
         class _Ephemeral:
@@ -167,6 +207,25 @@ def run_pipeline(
         ckpt = _Ephemeral()
     else:
         ckpt = CheckpointManager(spark, checkpoint_dir, run_id, cfg.config_hash())
+    # the parent's cumulative tables, each read (one schema job) once
+    parent = None
+    if parent_run_id is not None:
+        prev = CheckpointManager(spark, checkpoint_dir, parent_run_id, cfg.config_hash())
+        parent = {name: prev.read(name) for name in PARENT_TABLES}
+
+    def stage(name: str, compute) -> DataFrame:
+        t0 = time.monotonic()
+        out = ckpt.get_or_compute(name, compute)
+        metrics.append(
+            {"run_id": run_id, "stage": name,
+             "wall_ms": int((time.monotonic() - t0) * 1000)}
+        )
+        return out
+
+    def with_parent(name: str, rows: DataFrame) -> DataFrame:
+        """This run's rows of a stage plus its parent's, so a fold's
+        tables hold the whole corpus and can parent the next fold."""
+        return rows if parent is None else parent[name].unionByName(rows)
 
     # ---- surrogate ids ---------------------------------------------------
     # All internal shuffles (LSH buckets, pair tables, CC iterations) run
@@ -191,15 +250,14 @@ def run_pipeline(
     # at the provider's input partitioning (128 at bench) every probe
     # pays a full wave of near-empty tasks (measured 1.76 s for one agg
     # over 49k cached rows; ~0.4 s at shuffle_partitions). The count is
-    # the parameterized cfg knob, not a core-count constant.
-    keymap = timed(
+    # the parameterized cfg knob, not a core-count constant. A fold's
+    # keymap is a plain union with its parent's: duplicate keys are the
+    # clusters step's check, not a corpus-wide distinct.
+    keymap = stage(
         "keymap",
-        lambda: ckpt.get_or_compute(
-            "keymap",
-            lambda: keyed.select(
-                F.xxhash64("key_str").alias("id"), "key_str"
-            ).coalesce(cfg.shuffle_partitions),
-        ),
+        lambda: with_parent(
+            "keymap", keyed.select(F.xxhash64("key_str").alias("id"), "key_str")
+        ).coalesce(cfg.shuffle_partitions),
     )
     # ONE sha256 pass over the corpus serves all of Stage A: the slim
     # (key, sha) projection is persisted (8-byte id + 64-char hex per
@@ -207,25 +265,19 @@ def run_pipeline(
     # would checkpoint), the salted reps aggregation runs over it once,
     # and both the pair stage and the survivor stage consume the shared
     # ``reps`` frame (r6: previously exact_pairs and survivor_keys each
-    # recomputed exact_reps — three sha256 corpus scans per run).
-    key_sha = hashed.select("key", "sha").persist()
+    # recomputed exact_reps — three sha256 corpus scans per run). A fold
+    # adds its parent's survivors (one (key, sha) row per distinct
+    # content), so a new file equal to an old one links to the old
+    # representative (the Redis-hit analog) and old×old pairs never
+    # recur.
+    key_sha = with_parent("stage_a_survivors", hashed.select("key", "sha")).persist()
     reps = A.exact_reps(key_sha).persist()
-    sha_pairs = timed(
-        "stage_a_pairs",
-        lambda: ckpt.get_or_compute(
-            "stage_a_pairs", lambda: A.exact_pairs(key_sha, reps=reps)
-        ),
-    )
+    sha_pairs = stage("stage_a_pairs", lambda: A.exact_pairs(key_sha, reps))
     # survivor selection is content-free (key, sha only): content joins
     # back via a semi-join on key inside the signature stage, so document
     # bytes flow through exactly ONE exchange (the repartition-by-key
     # below) instead of sha-shuffle + key-shuffle
-    survivors = timed(
-        "stage_a_survivors",
-        lambda: ckpt.get_or_compute(
-            "stage_a_survivors", lambda: A.survivor_keys(reps=reps)
-        ),
-    )
+    survivors = stage("stage_a_survivors", lambda: A.survivor_keys(reps))
 
     # ---- signatures: one Arrow pass over sha-survivors ------------------
     # hash-partitioned by key, with no explicit count: AQE coalesces the
@@ -238,46 +290,60 @@ def run_pipeline(
     # the post-UDF shingle/band/winnow arrays (~3.5 KB/row). The verify
     # joins do not rely on this partitioning: in checkpoint mode they
     # read the signatures back from parquet, and in either mode AQE
-    # picks their strategy (see stage_b_lsh.verify_pairs).
-    sigs = timed(
-        "signatures",
-        lambda: ckpt.get_or_compute(
-            "signatures",
-            lambda: with_signatures(
-                hashed.join(survivors.select("key"), "key", "left_semi")
-                .repartition("key"),
-                cfg,
-                include_winnow=True,
-            ).select(*SIGNATURE_COLUMNS),
-        ),
+    # picks their strategy (see stage_b_lsh.verify_pairs). A fold signs
+    # only content its parent has not signed (anti-join on sha = the
+    # cache gate), so the Arrow pass is proportional to the increment.
+    unsigned = hashed if parent is None else hashed.join(
+        parent["stage_a_survivors"].select("sha"), "sha", "left_anti"
     )
+    signed = stage(
+        "signatures" if parent is None else "signatures_new",
+        lambda: with_signatures(
+            unsigned.join(survivors.select("key"), "key", "left_semi")
+            .repartition("key"),
+            cfg,
+            include_winnow=True,
+        ).select(*SIGNATURE_COLUMNS),
+    )
+    sigs = signed if parent is None else stage(
+        "signatures", lambda: with_parent("signatures", signed)
+    )
+    # a fold's candidates must touch one of these keys (None: any pair)
+    new_keys = None if parent is None else signed.select("key")
 
     # ---- Stage B: LSH candidates + verify --------------------------------
+    # A fold's band exchange carries only the buckets a new file lands
+    # in: the restriction keeps whole buckets, so caps and shared counts
+    # are unchanged for every pair touching a new key.
     def _stage_b():
-        cands, dropped = B.candidate_pairs(sigs, cfg)
+        touched = None if parent is None else (
+            B.explode_bands(signed).select("bucket").distinct()
+        )
+        cands, dropped = B.candidate_pairs(sigs, cfg, bucket_filter=touched)
         if verbose:
             n_dropped = dropped.count()
             if n_dropped:
                 # logged drop (SURVEY.md §4 skew row): hot boilerplate buckets
                 print(f"[stage_b] dropped {n_dropped} oversized band buckets")
-        return B.verify_pairs(cands, sigs, cfg)
+        return B.verify_pairs(_touching(cands, new_keys), sigs, cfg)
 
-    b_pairs = timed(
-        "stage_b_pairs", lambda: ckpt.get_or_compute("stage_b_pairs", _stage_b)
-    )
+    b_pairs = stage("stage_b_pairs", _stage_b)
 
     # ---- Stage C: containment on survivors -------------------------------
     def _stage_c():
-        cands, dropped = C.fingerprint_candidates(sigs, cfg)
+        touched = None if parent is None else (
+            signed.filter(F.size("winnow") > 0)
+            .select(F.explode("winnow").alias("fp"))
+            .distinct()
+        )
+        cands, dropped = C.fingerprint_candidates(sigs, cfg, fp_filter=touched)
         if verbose:
             n_dropped = dropped.count()
             if n_dropped:
                 print(f"[stage_c] dropped {n_dropped} oversized fingerprint buckets")
-        return C.verify_containment(cands, sigs, cfg)
+        return C.verify_containment(_touching(cands, new_keys), sigs, cfg)
 
-    c_pairs = timed(
-        "stage_c_pairs", lambda: ckpt.get_or_compute("stage_c_pairs", _stage_c)
-    )
+    c_pairs = stage("stage_c_pairs", _stage_c)
 
     # ---- union + dedup + connected components ---------------------------
     def _confirmed():
@@ -287,30 +353,32 @@ def run_pipeline(
             .unionByName(b_pairs)
             .unionByName(c_pairs)
         )
-        return _dedup_pairs(all_pairs)
+        return _dedup_pairs(with_parent("confirmed_pairs", all_pairs))
 
-    confirmed = timed(
-        "confirmed_pairs",
-        lambda: ckpt.get_or_compute("confirmed_pairs", _confirmed),
-    )
+    confirmed = stage("confirmed_pairs", _confirmed)
 
     def _clusters():
-        # One aggregation distinguishes duplicate-input keys from genuine
-        # xxhash64 collisions (a corpus with repeated (repo,path,commit)
-        # rows is an input error, not a hash failure).
-        chk = keymap.agg(
-            F.count("*").alias("n_rows"),
-            F.countDistinct("key_str").alias("n_keys"),
-            F.countDistinct("id").alias("n_ids"),
-        ).collect()[0]
-        if chk["n_keys"] != chk["n_rows"]:
+        # One grouped pass over the ids tells duplicate-input keys from
+        # genuine xxhash64 collisions (a corpus with repeated
+        # (repo,path,commit) rows is an input error, not a hash failure):
+        # an id held by several rows of one key_str is a duplicate key,
+        # one held by several key_strs a collision.
+        clashes = (
+            keymap.groupBy("id")
+            .agg(F.count("*").alias("n"), F.min("key_str").alias("lo"),
+                 F.max("key_str").alias("hi"))
+            .filter(F.col("n") > 1)
+            .collect()
+        )
+        n_dup = sum(r["n"] - 1 for r in clashes if r["lo"] == r["hi"])
+        if n_dup:
             raise RuntimeError(
-                f"duplicate corpus keys ({chk['n_rows'] - chk['n_keys']}): "
+                f"duplicate corpus keys ({n_dup}): "
                 "(repo, path, commit) must be unique per corpus row"
             )
-        if chk["n_ids"] != chk["n_keys"]:
+        if clashes:
             raise RuntimeError(
-                f"xxhash64 key collision ({chk['n_keys'] - chk['n_ids']}): "
+                f"xxhash64 key collision ({len(clashes)}): "
                 "switch to the 128-bit id documented above"
             )
         # the materialization already counted confirmed_pairs (ephemeral
@@ -320,8 +388,6 @@ def run_pipeline(
             keymap, confirmed, cfg, ckpt.rows_of("confirmed_pairs")
         )
 
-    clusters = timed(
-        "clusters", lambda: ckpt.get_or_compute("clusters", _clusters)
-    )
+    clusters = stage("clusters", _clusters)
 
     return PipelineResult(clusters=clusters, confirmed_pairs=confirmed, metrics=metrics)

@@ -26,6 +26,18 @@ def test_single_file(spark):
     assert k == v
 
 
+def test_repeated_corpus_row_raises(spark):
+    """A (repo, path, commit) key given twice is an input error: the
+    clusters step's key check names it instead of clustering it."""
+    rows = [
+        ("r", "a.py", "c1", "py", "first file body"),
+        ("r", "b.py", "c1", "py", "second file body"),
+        ("r", "a.py", "c1", "py", "first file body"),
+    ]
+    with pytest.raises(RuntimeError, match=r"duplicate corpus keys \(1\)"):
+        _run(spark, rows)
+
+
 def test_all_identical_contents(spark):
     rows = [("r", f"f{i}.py", "c1", "py", "same bytes everywhere") for i in range(20)]
     got = _run(spark, rows)

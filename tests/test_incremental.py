@@ -7,6 +7,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import pandas as pd
 import pytest
 
 from autovalidate_backend_api_spark import corpus as C
@@ -57,18 +58,56 @@ def scratch(spark, split_corpora):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_incremental_matches_scratch(spark, split_corpora, scratch):
+@pytest.fixture(scope="module")
+def folded(spark, split_corpora):
+    """(checkpoint dir, base result, fold result): a base run over the
+    first 80 bases and one fold of the rest onto it."""
     _, old_df, new_df = split_corpora
     tmp = tempfile.mkdtemp(prefix="av_incr_")
     try:
-        run_pipeline(spark, old_df, tmp, "base")
+        base = run_pipeline(spark, old_df, tmp, "base")
         incr = incremental_update(
             spark, new_df, tmp, prev_run_id="base", run_id="upd"
         )
-        got = {r["key"]: r["cluster_rep"] for r in incr.clusters.collect()}
-        assert got == scratch[0]
+        yield tmp, base, incr
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_incremental_matches_scratch(folded, scratch):
+    got = {r["key"]: r["cluster_rep"] for r in folded[2].clusters.collect()}
+    assert got == scratch[0]
+
+
+STAGES = [
+    "keymap", "stage_a_pairs", "stage_a_survivors", "signatures",
+    "stage_b_pairs", "stage_c_pairs", "confirmed_pairs", "clusters",
+]
+
+
+def test_metrics_list_every_stage(folded):
+    """Both entry points report one wall-clock entry per stage tag, in
+    plan order; the fold's list also holds its ``signatures_new``."""
+    _, base, incr = folded
+    fold_stages = STAGES[:3] + ["signatures_new"] + STAGES[3:]
+    for res, run_id, want in ((base, "base", STAGES), (incr, "upd", fold_stages)):
+        assert [m["stage"] for m in res.metrics] == want
+        for m in res.metrics:
+            assert m["run_id"] == run_id
+            assert isinstance(m["wall_ms"], int) and m["wall_ms"] >= 0
+
+
+def test_fold_rejects_reused_parent_keys(spark, full_pd, folded):
+    """An increment that re-uses (repo, path, commit) keys of its parent
+    with edited content is an input error, as in a from-scratch run:
+    the fold's key check raises instead of writing a second signature
+    under the same key."""
+    reused = full_pd[full_pd.base_id < 80][COLS].head(3).copy()
+    reused["content"] = reused["content"] + "\n# edited\n"
+    new = full_pd[full_pd.base_id >= 80][COLS]
+    increment = spark.createDataFrame(pd.concat([new, reused]))
+    with pytest.raises(RuntimeError, match=r"duplicate corpus keys \(3\)"):
+        incremental_update(spark, increment, folded[0], prev_run_id="base", run_id="dup")
 
 
 def test_fold_on_fold_matches_scratch(spark, full_pd, scratch):
@@ -102,7 +141,6 @@ def test_candidate_generation_is_increment_proportional(spark):
     increment-proportional — only buckets touched by a new key may enter
     the band/fingerprint exchange — while producing EXACTLY the same
     new-touching pairs as an unrestricted run over the union."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from autovalidate_backend_api_spark.functions.signatures import (
@@ -125,7 +163,9 @@ def test_candidate_generation_is_increment_proportional(spark):
             sha256_col(F.col("content")).alias("sha"),
             "content",
         ).select(F.xxhash64("key_str").alias("key"), "sha", "content")
-        survivors = keyed.join(A.survivor_keys(keyed), ["key", "sha"], "left_semi")
+        survivors = keyed.join(
+            A.survivor_keys(A.exact_reps(keyed)), ["key", "sha"], "left_semi"
+        )
         return with_signatures(survivors, PINNED, include_winnow=True).select(
             *SIGNATURE_COLUMNS
         )
@@ -180,17 +220,11 @@ def test_candidate_generation_is_increment_proportional(spark):
     all_sigs.unpersist()
 
 
-def test_increment_signs_only_new_content(spark, split_corpora):
+def test_increment_signs_only_new_content(spark, split_corpora, folded):
     """The expensive signature pass must be proportional to the
     increment (cache-gate semantics)."""
-    _, old_df, new_df = split_corpora
-    tmp = tempfile.mkdtemp(prefix="av_incr2_")
-    try:
-        run_pipeline(spark, old_df, tmp, "base")
-        incremental_update(spark, new_df, tmp, prev_run_id="base", run_id="upd")
-        mgr = CheckpointManager(spark, tmp, "upd", PINNED.config_hash())
-        n_new_sigs = mgr.manifest("signatures_new")["rows"]
-        assert n_new_sigs <= new_df.count()
-        assert n_new_sigs > 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    new_df = split_corpora[2]
+    mgr = CheckpointManager(spark, folded[0], "upd", PINNED.config_hash())
+    n_new_sigs = mgr.manifest("signatures_new")["rows"]
+    assert n_new_sigs <= new_df.count()
+    assert n_new_sigs > 0
