@@ -27,23 +27,16 @@ class PipelineConfig:
     token_shingle_k: int = 3          # k tokens per MinHash shingle
     char_gram_k: int = 4              # chars per SimHash gram
     # --- MinHash / LSH ---------------------------------------------------
-    num_perm: int = 128               # MinHash permutations / OPH buckets
+    num_perm: int = 128               # OPH buckets (MinHash signature slots)
     lsh_bands: int = 32               # bands
     lsh_rows: int = 4                 # rows per band (bands*rows == num_perm)
-    # "oph" = one-permutation hashing + OPTIMAL (hash-probing)
-    # densification (one hash pass; ~num_perm× less signature compute —
-    # rotation densification was deliberately rejected: it creates bursty
-    # correlated slots on sparse signatures, see hashing.oph_signature);
-    # "classic" = per-permutation multiply-shift MinHash. Participates in
-    # config_hash, so changing the scheme invalidates prior checkpoints.
-    minhash_scheme: str = "oph"
-    # LSH bucket-key encoding version: "packed-v2" folds family + band
-    # index into the 64-bit band hash (one-long bucket keys, 16-byte
-    # band rows). In config_hash so checkpoints written under the old
-    # (family, band_idx, band_hash) encoding are invalidated, not mixed.
-    band_key_encoding: str = "packed-v2"
-    minhash_seed: int = 42
-    char_minhash_seed: int = 1337     # char-gram MinHash family (dual scorer)
+    # MinHash is one-permutation hashing + OPTIMAL (hash-probing)
+    # densification: one hash pass per doc, no seeded permutation family
+    # (rotation densification was deliberately rejected: it creates
+    # bursty correlated slots on sparse signatures, see
+    # hashing.oph_signature). LSH bucket keys fold family + band index
+    # into the 64-bit band hash (one-long keys, stage_b_lsh).
+
     # S-curve threshold (1/bands)^(1/rows) ≈ 0.66 < 0.75 verify threshold
     # ⇒ recall-safe over-generation (reference over-fetch pattern).
     # Require ≥2 shared LSH buckets per candidate pair. At the verify
@@ -67,16 +60,8 @@ class PipelineConfig:
     # contains_min_len below.
     winnow_window: int = 128
     winnow_probe_h: int = 8           # bottom-h probe sketch (candidate gen)
-    # Stage-C confirm mode: "contains" = exact substring (the PINNED
-    # oracle semantics); "lcs_run" = suffix-automaton longest-common-
-    # substring ≥ lcs_min_run chars (functions/substring.py) — confirms
-    # pairs sharing a long verbatim block even when neither side fully
-    # contains the other (shared-function/boilerplate-block near-dups
-    # that exact contains() misses). lcs_min_run=0 → contains_min_len.
-    # Participates in config_hash (adding it invalidates pre-r5b
-    # checkpoints, as any verify-semantics knob must).
-    containment_confirm: str = "contains"
-    lcs_min_run: int = 0
+    # (Stage C confirms by exact substring, contains() on normalized
+    # text — the oracle semantics; stage_c_substring.verify_containment.)
 
     @property
     def contains_min_len(self) -> int:
@@ -93,7 +78,7 @@ class PipelineConfig:
     # Fingerprint-poor rescue bound (stage_c_substring.py): hot buckets
     # up to this size still serve probes from docs with ≤ winnow_probe_h
     # fingerprints (short docs whose ENTIRE fp set may be boilerplate-
-    # hot); beyond it the bucket is dropped outright and logged.
+    # hot); beyond it the bucket is dropped outright and counted.
     hot_fp_hard_cap: int = 4096
     # Partition count of the keymap coalesce (plans/pipeline.py) and the
     # gate queries that repartition explicitly. The pipeline's keyed
@@ -101,10 +86,6 @@ class PipelineConfig:
     # count: AQE sizes them by bytes, so this does not pin their task
     # waves.
     shuffle_partitions: int = 32
-    # (a `salt_buckets` knob for hot band-hash keys was removed in r5 —
-    # the implemented hot-key strategy is count-first drop-and-log, and
-    # Stage A's two-phase agg carries its own local SALT_BUCKETS=16;
-    # removal changes config_hash, invalidating pre-r5 checkpoints.)
     # Size dispatch for connected components: an edge set at or below
     # this count is collected and solved with driver-side union-find
     # (milliseconds, zero iterative Spark jobs — dup-pair edge sets are

@@ -1436,7 +1436,7 @@ def incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     increment = corpus.filter(F.col("doc_id") % 4 == 0).drop("doc_id")
     cfg = _dc_replace(PINNED, hamming_max=-1)
     tmp = tempfile.mkdtemp(prefix="incr_gate_")
-    run_pipeline(spark, base, tmp, run_id="base", cfg=cfg, verbose=False)
+    run_pipeline(spark, base, tmp, run_id="base", cfg=cfg)
     res = incremental_update(spark, increment, tmp, "base", "inc", cfg)
     return res.clusters.select("key", "cluster_rep")
 
@@ -1469,7 +1469,7 @@ def dedup_pipeline_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = _dc_replace(PINNED, hamming_max=-1)
     tmp = tempfile.mkdtemp(prefix="pipe_gate_")
-    res = run_pipeline(spark, corpus, tmp, run_id="full", cfg=cfg, verbose=False)
+    res = run_pipeline(spark, corpus, tmp, run_id="full", cfg=cfg)
     return res.clusters.select("key", "cluster_rep")
 
 
@@ -1560,7 +1560,7 @@ def cluster_aware_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = _dc_replace(PINNED, hamming_max=-1)
     tmp = tempfile.mkdtemp(prefix="casplit_gate_")
-    res = run_pipeline(spark, corpus, tmp, run_id="cas", cfg=cfg, verbose=False)
+    res = run_pipeline(spark, corpus, tmp, run_id="cas", cfg=cfg)
     return cluster_aware_split(res.clusters.select("key", "cluster_rep"))
 
 
@@ -2047,12 +2047,12 @@ def lcs_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lcs_confirm_pairs(pairs, docs.unionByName(planted))
 
 
-# The lcs_run confirm rule end-to-end, threshold exercised BOTH ways:
+# A shared-run confirm rule end-to-end, threshold exercised BOTH ways:
 # per-doc excerpts of varying token length (5 + doc_id % 30 tokens) land
 # on both sides of the 143-char run threshold (contains_min_len), so the
 # oracle checks exact recall (kept rows = excerpts ≥ 143 chars, lcs =
-# exact excerpt length) AND rejection (shorter excerpts filtered) —
-# the admission semantics Stage C's containment_confirm="lcs_run" uses.
+# exact excerpt length) AND rejection (shorter excerpts filtered) — a
+# verbatim block at least as long as Stage C's containment guarantee.
 @_register(
     "lcs_run_confirm_pairs",
     f"""WITH toks AS (SELECT doc_id, string_split({_NORM_SQL}, ' ') AS t FROM documents),

@@ -11,9 +11,10 @@ signatures (per BASELINE.json north_rule):
   (the Qdrant semantic fallback analog, search.py:139-176)
 
 Everything is numpy uint64 arithmetic inside Arrow-batched pandas UDFs —
-no per-row Python in Spark's hot path (input_hint mandate). The hash
-family is multiply-shift mod 2**64 (odd multipliers), mixed with a
-splitmix64 finalizer; deterministic across runs given the pinned seed.
+no per-row Python in Spark's hot path (input_hint mandate). Gram hashes
+are a polynomial rolling hash mod 2**64 (odd multiplier), mixed with a
+splitmix64 finalizer; MinHash is one-permutation hashing over them, so
+signatures are deterministic across runs with no seed.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from typing import Iterable
 
 import numpy as np
 
-from autovalidate_backend_api_spark.config import PipelineConfig, PINNED
+from autovalidate_backend_api_spark.config import PINNED
 
 _U64 = np.uint64
 _GOLDEN = _U64(0x9E3779B97F4A7C15)
@@ -184,39 +185,10 @@ def norm_shingle_hashes(norm: str, k: int = PINNED.token_shingle_k) -> np.ndarra
     return shingle_hashes_from_prefix(b, prefix, pow_, k)
 
 
-def minhash_params(cfg: PipelineConfig = PINNED) -> tuple[np.ndarray, np.ndarray]:
-    """Seeded (a, b) multiply-shift parameters; a forced odd."""
-    rng = np.random.default_rng(cfg.minhash_seed)
-    a = rng.integers(1, 2**63, size=cfg.num_perm, dtype=np.uint64) * _U64(2) + _U64(1)
-    b = rng.integers(0, 2**63, size=cfg.num_perm, dtype=np.uint64)
-    return a, b
-
-
 # Signature of an empty document: max-uint64 in every slot. Two empty
 # documents are exact duplicates (Stage A catches them); the sentinel
 # keeps them from LSH-matching everything.
 EMPTY_SLOT = np.uint64(0xFFFFFFFFFFFFFFFF)
-
-
-def minhash_signature(
-    shingles: np.ndarray, a: np.ndarray, b: np.ndarray, _chunk: int = 16
-) -> np.ndarray:
-    """num_perm-wide MinHash signature of a distinct-shingle hash array.
-
-    Computed in (chunk, m) blocks so the working set stays in L2 —
-    the naive (m, num_perm) matrix is memory-bandwidth-bound and
-    stops scaling across executor cores (~2× measured win).
-    """
-    P = a.shape[0]
-    if shingles.size == 0:
-        return np.full(P, EMPTY_SLOT, dtype=_U64)
-    out = np.empty(P, dtype=_U64)
-    with np.errstate(**_ERRSTATE):
-        for c in range(0, P, _chunk):
-            out[c : c + _chunk] = (
-                a[c : c + _chunk, None] * shingles[None, :] + b[c : c + _chunk, None]
-            ).min(axis=1)
-    return out
 
 
 def oph_signature(shingles: np.ndarray, num_perm: int = PINNED.num_perm) -> np.ndarray:
@@ -234,18 +206,16 @@ def oph_signature(shingles: np.ndarray, num_perm: int = PINNED.num_perm) -> np.n
     measured here to create BURSTY correlated slots on sparse
     signatures: runs of consecutive borrowed slots match together,
     inflating LSH band collisions ~30% and costing ~0.5% verify recall.)
-    Same LSH banding behavior as classic per-permutation MinHash at
+    Same LSH banding behavior as per-permutation MinHash at
     ~1/num_perm the compute; recall gate re-validated in
     tests/test_pipeline_recall.py.
 
     Known residual (measured at the 20k-file bench corpus): documents
     with far fewer elements than num_perm densify most slots from few
     sources, so their band collisions correlate — ~20-25% more LOW-J
-    candidate pairs than classic (exact verify kills them; per-J≥0.7
-    candidate counts are identical between schemes). Acceptable trade
-    for the ~11×-per-doc signature speedup; if sparse-doc candidate
-    mass ever dominates, route docs with < num_perm elements through
-    minhash_signature within a size-bucketed join.
+    candidate pairs than per-permutation MinHash (exact verify kills
+    them; per-J≥0.7 candidate counts were identical between the two).
+    tests/test_skew.py pins that sparse high-J pairs stay candidates.
     """
     p = num_perm
     log2p = p.bit_length() - 1

@@ -53,19 +53,14 @@ def make_signature_udf(cfg: PipelineConfig = PINNED, include_winnow: bool = True
     """pandas UDF: raw content → norm + every signature column.
 
     One fused Arrow round trip: normalization (Python ``re``, byte-parity
-    with functions/normalize.py), token-shingle MinHash bands, char-gram
-    MinHash bands, SimHash, winnowing fingerprints. Char-gram hashes are
+    with functions/normalize.py), token-shingle OPH MinHash bands, char-gram
+    OPH MinHash bands, SimHash, winnowing fingerprints. Char-gram hashes are
     computed once and shared by the char MinHash and SimHash.
     """
-    import dataclasses
-
-    a_tok, b_tok = H.minhash_params(cfg)
-    chr_cfg = dataclasses.replace(cfg, minhash_seed=cfg.char_minhash_seed)
-    a_chr, b_chr = H.minhash_params(chr_cfg)
     k_tok, k_chr = cfg.token_shingle_k, cfg.char_gram_k
     bands, rows = cfg.lsh_bands, cfg.lsh_rows
     wk, ww = cfg.winnow_gram_k, cfg.winnow_window
-    oph, num_perm = cfg.minhash_scheme == "oph", cfg.num_perm
+    num_perm = cfg.num_perm
 
     @F.pandas_udf(_sig_schema(include_winnow))
     def signature(norm_iter: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
@@ -80,31 +75,23 @@ def make_signature_udf(cfg: PipelineConfig = PINNED, include_winnow: bool = True
             sim_out = np.empty(m, dtype=np.uint64)
             for i, raw in enumerate(content):
                 s = raw if isinstance(raw, str) else ""
-                if oph:
-                    # ONE prefix-hash pass per doc feeds every gram
-                    # family: token shingles (variable spans), char
-                    # 4-grams (MinHash + SimHash), winnow 16-grams —
-                    # see hashing.py (values identical to the per-family
-                    # loops; exact-parity tested).
-                    b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8).astype(
-                        np.uint64
-                    )
-                    n = b.shape[0]
-                    if n:
-                        prefix, pow_ = H._prefix_hashes(b)
-                        sh = H.shingle_hashes_from_prefix(b, prefix, pow_, k_tok)
-                        grams = H.gram_hashes_from_prefix(prefix, pow_, n, k_chr)
-                        grams_w = H.gram_hashes_from_prefix(prefix, pow_, n, wk)
-                    else:
-                        sh = grams = grams_w = np.empty(0, dtype=np.uint64)
-                    sig_t = H.oph_signature(sh, num_perm)
-                    sig_c = H.oph_signature(np.unique(grams), num_perm)
+                # ONE prefix-hash pass per doc feeds every gram family:
+                # token shingles (variable spans), char 4-grams (MinHash
+                # + SimHash), winnow 16-grams — see hashing.py (values
+                # identical to the per-family loops; exact-parity tested).
+                b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8).astype(
+                    np.uint64
+                )
+                n = b.shape[0]
+                if n:
+                    prefix, pow_ = H._prefix_hashes(b)
+                    sh = H.shingle_hashes_from_prefix(b, prefix, pow_, k_tok)
+                    grams = H.gram_hashes_from_prefix(prefix, pow_, n, k_chr)
+                    grams_w = H.gram_hashes_from_prefix(prefix, pow_, n, wk)
                 else:
-                    grams = H.char_gram_hashes(s, k_chr)
-                    grams_w = None
-                    sh = H.token_shingle_hashes(H.tokens_of(s), k_tok)
-                    sig_t = H.minhash_signature(sh, a_tok, b_tok)
-                    sig_c = H.minhash_signature(np.unique(grams), a_chr, b_chr)
+                    sh = grams = grams_w = np.empty(0, dtype=np.uint64)
+                sig_t = H.oph_signature(sh, num_perm)
+                sig_c = H.oph_signature(np.unique(grams), num_perm)
                 sh_out[i] = H.to_int64(sh)
                 bt_out[i] = H.to_int64(H.band_hashes(sig_t, bands, rows, salt=0))
                 bc_out[i] = H.to_int64(H.band_hashes(sig_c, bands, rows, salt=bands))

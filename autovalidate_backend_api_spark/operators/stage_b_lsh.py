@@ -11,7 +11,7 @@ char-space MinHash ≈ fuzz.ratio; SimHash Hamming is the char-space
 verify metric.
 
 Skew & scale (SURVEY.md §4):
-- band buckets above ``max_band_bucket`` are DROPPED and logged —
+- band buckets above ``max_band_bucket`` are DROPPED and counted —
   boilerplate shingles (license headers) produce huge buckets whose
   pairs are overwhelmingly non-dups; their true dup pairs are still
   reachable via their other 31+32 bands. This caps worst-case pair
@@ -28,7 +28,7 @@ Skew & scale (SURVEY.md §4):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from typing import Iterator
@@ -107,20 +107,36 @@ def explode_bands(sigs: DataFrame) -> DataFrame:
     )
 
 
+def drop_metrics() -> list[Column]:
+    """``dropped_buckets``/``dropped_members`` of a frame of hot buckets."""
+    return [F.count(F.lit(1)).alias("dropped_buckets"),
+            F.sum("bucket_n").alias("dropped_members")]
+
+
+def observe_drops(dropped: DataFrame, observation: Observation | None) -> DataFrame:
+    """``dropped`` observed into ``observation`` (``drop_metrics``): the
+    counts ride the query that first runs it, the stage's hot-bucket
+    broadcast, at no job cost. Unchanged when ``observation`` is None."""
+    if observation is None:
+        return dropped
+    return dropped.observe(observation, *drop_metrics())
+
+
 def candidate_pairs(
     sigs: DataFrame,
     cfg: PipelineConfig = PINNED,
     bucket_filter: DataFrame | None = None,
+    observation: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """LSH candidate pairs (src < dst) + dropped-bucket log.
+    """LSH candidate pairs (src < dst) + the dropped hot buckets.
 
     One shuffle: the exploded band table groups by bucket key and pair
     generation happens inside each bucket row with JVM higher-order
     functions (i<j combinations) — no self-join, no second pass for
     bucket sizing. Oversized buckets (boilerplate band hashes) are
-    dropped and logged; their true dup pairs remain reachable via the
-    other 63 bands of the two families. Caps worst-case pair fan-out at
-    O(buckets · cap²).
+    dropped and counted into ``observation`` (``observe_drops``); their
+    true dup pairs remain reachable via the other 63 bands of the two
+    families. Caps worst-case pair fan-out at O(buckets · cap²).
 
     ``bucket_filter`` (one ``bucket`` column) restricts generation to
     those buckets via a semi-join BEFORE the bucket exchange — a fold
@@ -164,7 +180,9 @@ def candidate_pairs(
     # when most are empty).
     bands = bands.repartition(*bucket_cols)
     sizes = bands.groupBy(*bucket_cols).agg(F.count("*").alias("bucket_n"))
-    dropped = sizes.filter(F.col("bucket_n") > cfg.max_band_bucket)
+    dropped = observe_drops(
+        sizes.filter(F.col("bucket_n") > cfg.max_band_bucket), observation
+    )
     bands = bands.join(
         F.broadcast(dropped.select(*bucket_cols)), bucket_cols, "left_anti"
     )

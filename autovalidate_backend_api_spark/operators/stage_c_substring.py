@@ -28,18 +28,22 @@ dropped afterwards by the pipeline's first-stage-wins dedup
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from autovalidate_backend_api_spark.config import PipelineConfig, PINNED
+from autovalidate_backend_api_spark.operators.stage_b_lsh import observe_drops
 
 
 def fingerprint_candidates(
     sigs: DataFrame,
     cfg: PipelineConfig = PINNED,
     fp_filter: DataFrame | None = None,
+    observation: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Pairs sharing ≥1 winnowing fingerprint (src ≠ dst) + dropped log.
+    """Pairs sharing ≥1 winnowing fingerprint (src ≠ dst) + the dropped
+    hot buckets (counted into ``observation``, see
+    ``stage_b_lsh.observe_drops``).
 
     Probe/index asymmetric join (the over-fetch cost control):
 
@@ -48,7 +52,7 @@ def fingerprint_candidates(
       in B's full set, so one probe hit suffices — recall is preserved
       while join fan-out drops from ~fingerprints/doc to h.
     - *index* side: all fingerprints, hot buckets (license boilerplate)
-      capped at ``max_fingerprint_bucket`` and logged, like Stage B.
+      capped at ``max_fingerprint_bucket`` and counted, like Stage B.
 
     FINGERPRINT-POOR RESCUE: a short document (≈ a few hundred norm
     chars) may have only 1-4 fingerprints, and common-vocabulary corpora
@@ -63,7 +67,7 @@ def fingerprint_candidates(
     bounded by the hard cap. Residual miss risk is confined to
     rich-vs-rich pairs whose EVERY shared fingerprint is hot
     ((boilerplate_share)^(h+1) — negligible) and to buckets above the
-    hard cap (logged).
+    hard cap (counted).
 
     ``fp_filter`` (one ``fp`` column) restricts generation to those
     fingerprint buckets via a pre-shuffle semi-join — a fold
@@ -113,12 +117,15 @@ def fingerprint_candidates(
     # dropped outright: beyond the hard cap, or hot with no poor
     # prober (nothing to rescue there — a rich doc's OTHER
     # fingerprints carry its recall)
-    dropped = sizes.filter(
-        (F.col("bucket_n") > cfg.hot_fp_hard_cap)
-        | (
-            (F.col("bucket_n") > cfg.max_fingerprint_bucket)
-            & (F.col("poor_n") == 0)
-        )
+    dropped = observe_drops(
+        sizes.filter(
+            (F.col("bucket_n") > cfg.hot_fp_hard_cap)
+            | (
+                (F.col("bucket_n") > cfg.max_fingerprint_bucket)
+                & (F.col("poor_n") == 0)
+            )
+        ),
+        observation,
     )
     # ONE pass over items, ONE grouped shuffle: surviving hot buckets
     # (≤ hard cap, poor-probed) ride the same collect_list as normal
@@ -182,22 +189,12 @@ def fingerprint_candidates(
     )
     # NO broadcast hint: probe_n is corpus-sized (one row per probing
     # doc) — AQE broadcasts it at bench scale and falls back to a
-    # shuffle join at web scale where a forced broadcast would OOM
-    # Candidate admission depends on the confirm mode: full containment
-    # requires the prober's ENTIRE surviving probe set shared (count
-    # equality — the subset test on counts); shared-run confirm
-    # ("lcs_run") only guarantees the run's fingerprints are shared, so
-    # equality would reject every partial-overlap pair before the LCS
-    # confirm could see it — any shared probe admits the pair there.
-    # (Recall contract in lcs_run mode: the shared run must contribute a
-    # bottom-h probe fingerprint of at least one side — raise
-    # winnow_probe_h for stricter block-detection recall.)
-    if cfg.containment_confirm == "lcs_run":
-        admitted = shared.filter(F.col("shared_n") >= 1)
-    else:
-        admitted = shared.join(probe_n, "pkey").filter(
-            F.col("shared_n") == F.col("probe_n")
-        )
+    # shuffle join at web scale where a forced broadcast would OOM.
+    # Admission: the prober's ENTIRE surviving probe set is shared
+    # (count equality — the subset test on counts).
+    admitted = shared.join(probe_n, "pkey").filter(
+        F.col("shared_n") == F.col("probe_n")
+    )
     pairs = (
         admitted.select(
             F.least("pkey", "okey").alias("src"),
@@ -227,20 +224,7 @@ def verify_containment(
 
     Output: src, dst, jaccard(=length ratio small/big), hamming(=-1
     sentinel), stage='substring'.
-
-    Confirm modes (``cfg.containment_confirm``):
-
-    - ``"contains"`` (PINNED): exact substring — the oracle semantics.
-    - ``"lcs_run"``: suffix-automaton longest-common-substring ≥
-      ``cfg.lcs_min_run`` chars (0 → ``contains_min_len``). Confirms
-      pairs sharing a long verbatim block even when neither side fully
-      contains the other (two source files sharing one big function) —
-      the winnowing candidate guarantee still applies because a shared
-      run ≥ window+gram-1 forces shared fingerprints. The Arrow UDF
-      runs only on the count-prefiltered survivor pairs.
     """
-    phase1 = pairs
-
     src_sig = sigs.select(F.col("key").alias("src"), F.col("norm").alias("norm_a"))
     dst_sig = sigs.select(F.col("key").alias("dst"), F.col("norm").alias("norm_b"))
     la, lb = F.length("norm_a"), F.length("norm_b")
@@ -252,28 +236,15 @@ def verify_containment(
     # side streams with no exchange/sort; at scale AQE falls back to
     # the spillable sort-merge join on its own. The norm side is never
     # force-broadcast (accurate cached statistics ≫ the threshold).
-    joined = (
-        phase1.join(src_sig, "src")
+    confirmed = (
+        pairs.join(src_sig, "src")
         .join(dst_sig, "dst")
-    )
-    if cfg.containment_confirm == "lcs_run":
-        from autovalidate_backend_api_spark.functions.substring import (
-            _lcs_len_udf_once,
-        )
-
-        min_run = cfg.lcs_min_run or cfg.contains_min_len
-        # _once: the threshold filter below would otherwise duplicate
-        # the suffix-automaton UDF into a second ArrowEvalPython
-        confirmed = joined.withColumn(
-            "_lcs", _lcs_len_udf_once(F.col("norm_a"), F.col("norm_b"))
-        ).filter(F.col("_lcs") >= F.lit(min_run))
-        score = F.col("_lcs") / F.greatest(F.least(la, lb), F.lit(1))
-    else:
-        confirmed = joined.filter(
+        .filter(
             (F.length(small) >= F.lit(cfg.contains_min_len))
             & F.contains(big, small)
         )
-        score = F.least(la, lb) / F.greatest(la, lb)
+    )
+    score = F.least(la, lb) / F.greatest(la, lb)
     return confirmed.select(
         "src",
         "dst",

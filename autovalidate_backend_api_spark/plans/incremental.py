@@ -53,11 +53,7 @@ def incremental_update(
     run_id: str,
     cfg: PipelineConfig = PINNED,
 ) -> PipelineResult:
-    """Fold ``new_corpus`` into run ``prev_run_id`` as run ``run_id``.
-
-    The dropped-bucket counts are not logged (``verbose=False``): they
-    would re-run the Stage B and C exchanges."""
+    """Fold ``new_corpus`` into run ``prev_run_id`` as run ``run_id``."""
     return run_plan(
-        spark, new_corpus, checkpoint_dir, run_id, cfg,
-        verbose=False, parent_run_id=prev_run_id,
+        spark, new_corpus, checkpoint_dir, run_id, cfg, parent_run_id=prev_run_id
     )

@@ -35,7 +35,8 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from autovalidate_backend_api_spark.config import PINNED, PipelineConfig
@@ -126,14 +127,38 @@ def _touching(cands: DataFrame, new_keys: DataFrame | None) -> DataFrame:
     """The (src, dst) candidates with at least one endpoint in ``new_keys``
     (old×old pairs are already known — a new-touched bucket still pairs
     its old members with each other); every candidate when there is no
-    parent run (``new_keys`` None)."""
+    parent run (``new_keys`` None). ``cands`` enters the plan once, so
+    its hot-bucket observation is on no union branch AQE could prune."""
     if new_keys is None:
         return cands
     return (
-        cands.join(new_keys.withColumnRenamed("key", "src"), "src", "left_semi")
-        .unionByName(cands.join(new_keys.withColumnRenamed("key", "dst"), "dst", "left_semi"))
+        cands.select("src", "dst", F.explode(F.array("src", "dst")).alias("key"))
+        .join(new_keys, "key", "left_semi")
+        .select("src", "dst")
         .dropDuplicates(["src", "dst"])
     )
+
+
+def _drop_counts(obs: Observation, dropped: DataFrame, rows_out: int | None) -> dict:
+    """A stage's hot-bucket drops, from the observation its query filled
+    (``stage_b_lsh.observe_drops``; no job of its own). It has no row
+    when AQE left its node out of the final plan: when the drop set is
+    empty (the anti-join loses its empty broadcast side), or when an
+    empty stage after the anti-join made the subtree an empty relation.
+    ``sizes`` and the anti-join's left side are one table, and every
+    path from there to the output is inner joins, filters and
+    aggregations (no union), so a stage that wrote rows lost it the
+    first way: no drops. One that wrote none re-counts."""
+    try:
+        row = obs.get
+    except Py4JJavaError as e:  # toPyRow asserts on the missing row
+        if e.java_exception.getClass().getName() != "java.lang.AssertionError":
+            raise
+        row = {"dropped_buckets": 0} if rows_out else (
+            dropped.agg(*B.drop_metrics()).first().asDict()
+        )
+    return {"dropped_buckets": int(row["dropped_buckets"]),
+            "dropped_members": int(row.get("dropped_members") or 0)}
 
 
 def run_pipeline(
@@ -148,11 +173,9 @@ def run_pipeline(
 
     checkpoint_dir=None disables durable checkpoints (bench mode):
     stage outputs are persisted in memory/disk cache instead — same
-    dataflow, no resumability. verbose=False skips the dropped-bucket
-    count actions for benchmarking: six Spark jobs, three in each of
-    Stage B and Stage C (each ``dropped.count()`` re-runs its stage's
-    exchange)."""
-    return run_plan(spark, corpus, checkpoint_dir, run_id, cfg, verbose)
+    dataflow, no resumability. ``verbose`` is ignored; it stays so the
+    bench scripts' calls still bind (drop counts are in ``metrics``)."""
+    return run_plan(spark, corpus, checkpoint_dir, run_id, cfg)
 
 
 def run_plan(
@@ -161,7 +184,6 @@ def run_plan(
     checkpoint_dir: str | None,
     run_id: str,
     cfg: PipelineConfig,
-    verbose: bool,
     parent_run_id: str | None = None,
 ) -> PipelineResult:
     """The one Stage A→D plan, for a from-scratch run and for a fold.
@@ -175,6 +197,10 @@ def run_plan(
     ``signatures_new``); Stage B and C generate candidates only from the
     buckets and fingerprints of the new signatures and keep only pairs
     touching a new key. Without a parent every guard is a no-op.
+
+    ``metrics`` has one entry per stage (run_id, stage, wall_ms); Stage
+    B's and C's add ``dropped_buckets``/``dropped_members`` (a fold's:
+    among the buckets it touches) unless resumed from a checkpoint.
 
     Stages materialize SEQUENTIALLY — deliberate, measured (r4): driver-
     thread concurrency for the independent branches (keymap ∥ Stage-A
@@ -213,13 +239,18 @@ def run_plan(
         prev = CheckpointManager(spark, checkpoint_dir, parent_run_id, cfg.config_hash())
         parent = {name: prev.read(name) for name in PARENT_TABLES}
 
+    # (observation, dropped) of a Stage B/C query that ran: a resumed
+    # stage never fills its observation, and reading it would block
+    drops: dict[str, tuple[Observation, DataFrame]] = {}
+
     def stage(name: str, compute) -> DataFrame:
         t0 = time.monotonic()
         out = ckpt.get_or_compute(name, compute)
-        metrics.append(
-            {"run_id": run_id, "stage": name,
-             "wall_ms": int((time.monotonic() - t0) * 1000)}
-        )
+        entry = {"run_id": run_id, "stage": name,
+                 "wall_ms": int((time.monotonic() - t0) * 1000)}
+        if name in drops:
+            entry.update(_drop_counts(*drops.pop(name), ckpt.rows_of(name)))
+        metrics.append(entry)
         return out
 
     def with_parent(name: str, rows: DataFrame) -> DataFrame:
@@ -319,12 +350,11 @@ def run_plan(
         touched = None if parent is None else (
             B.explode_bands(signed).select("bucket").distinct()
         )
-        cands, dropped = B.candidate_pairs(sigs, cfg, bucket_filter=touched)
-        if verbose:
-            n_dropped = dropped.count()
-            if n_dropped:
-                # logged drop (SURVEY.md §4 skew row): hot boilerplate buckets
-                print(f"[stage_b] dropped {n_dropped} oversized band buckets")
+        obs = Observation()
+        cands, dropped = B.candidate_pairs(
+            sigs, cfg, bucket_filter=touched, observation=obs
+        )
+        drops["stage_b_pairs"] = (obs, dropped)
         return B.verify_pairs(_touching(cands, new_keys), sigs, cfg)
 
     b_pairs = stage("stage_b_pairs", _stage_b)
@@ -336,11 +366,11 @@ def run_plan(
             .select(F.explode("winnow").alias("fp"))
             .distinct()
         )
-        cands, dropped = C.fingerprint_candidates(sigs, cfg, fp_filter=touched)
-        if verbose:
-            n_dropped = dropped.count()
-            if n_dropped:
-                print(f"[stage_c] dropped {n_dropped} oversized fingerprint buckets")
+        obs = Observation()
+        cands, dropped = C.fingerprint_candidates(
+            sigs, cfg, fp_filter=touched, observation=obs
+        )
+        drops["stage_c_pairs"] = (obs, dropped)
         return C.verify_containment(_touching(cands, new_keys), sigs, cfg)
 
     c_pairs = stage("stage_c_pairs", _stage_c)

@@ -1,7 +1,8 @@
 """SparkSession builder tuned for this engine.
 
-Local-mode defaults follow the sandbox (local[32], 128 GiB); on a real
-cluster the same conf keys apply, sized per executor. AQE is always on —
+Local-mode defaults follow the host (``SPARK_GRAFT_CPUS`` cores, else 32;
+a driver heap of half its memory, at most 24g); on a real cluster the
+same conf keys apply, sized per executor. AQE is always on —
 it handles skewed LSH band-hash joins at runtime (skew-join splitting)
 on top of our explicit salting.
 """
@@ -11,6 +12,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+DRIVER_MEM_CAP_GB = 24
+
+
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEM`` if set, else half the host's physical memory
+    capped at 24g. The local-mode driver JVM holds every executor; a
+    heap near the host's size lets it grow until the kernel kills it."""
+    if env := os.environ.get("SPARK_DRIVER_MEM"):
+        return env
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(DRIVER_MEM_CAP_GB, phys // 2 // 2**30))}g"
 
 
 def build_session(
@@ -72,7 +86,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

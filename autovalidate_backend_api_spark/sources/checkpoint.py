@@ -6,14 +6,15 @@ Redis + the ``typo_training_dataset`` table
 survives the process and short-circuits future work.
 
 One backend: parquet directories with Spark's atomic ``_SUCCESS``
-marker plus a JSON manifest carrying the config hash and per-file row
-counts (lineage). Iceberg (atomic snapshot commits, ``writeTo(...)
-.append()``) remains the production target in the design only; no code
-path here writes it.
+marker plus a JSON manifest carrying the config hash, the schema and
+per-file row counts (lineage). Iceberg (atomic snapshot commits,
+``writeTo(...).append()``) remains the production target in the design
+only; no code path here writes it.
 
 Resume semantics: a stage is skipped iff its checkpoint exists AND was
 written under the same pipeline-config hash — a config change invalidates
-downstream state automatically.
+downstream state automatically, and reading a stage written under another
+config (a fold's parent) raises.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 def _fs_for(path: str):
     """(pyarrow FileSystem, scheme-stripped path) for local or remote URIs."""
@@ -134,7 +136,9 @@ class CheckpointManager:
 
     Each stage is a parquet directory (``data``, committed by Spark's
     ``_SUCCESS`` marker) plus a JSON manifest holding the config hash
-    that gates resume and the per-file row counts.
+    that gates resume, the per-file row counts and the table's schema.
+    Every read passes that schema, so no read runs Spark's parquet
+    schema-inference job.
     """
 
     def __init__(self, spark: SparkSession, base_dir: str, run_id: str, config_hash: str):
@@ -178,7 +182,7 @@ class CheckpointManager:
         path = os.path.join(self._stage_dir(stage), "data")
         t0 = time.monotonic()
         df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
+        out = self.spark.read.schema(df.schema).parquet(path)
         per_part = _parquet_footer_counts(path)
         rows = sum(p[1] for p in per_part)
         manifest = {
@@ -189,13 +193,27 @@ class CheckpointManager:
             "partitions": sorted(per_part),
             "wall_ms": int((time.monotonic() - t0) * 1000),
             "path": path,
+            "schema": df.schema.json(),
         }
         with open(self._manifest_path(stage), "w") as f:
             json.dump(manifest, f)
         return out
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._stage_dir(stage), "data"))
+        """A committed stage, read with its manifest's schema. Raises when
+        the stage was written under another config: its rows (band
+        hashes, fingerprints, verified pairs) come from other parameters
+        and must not be mixed with this config's."""
+        manifest = self.manifest(stage)
+        if manifest.get("config_hash") != self.config_hash:
+            raise RuntimeError(
+                f"checkpoint {self.run_id}/{stage} was written under config "
+                f"{manifest.get('config_hash')}, not {self.config_hash}"
+            )
+        schema = StructType.fromJson(json.loads(manifest["schema"]))
+        return self.spark.read.schema(schema).parquet(
+            os.path.join(self._stage_dir(stage), "data")
+        )
 
     def manifest(self, stage: str) -> dict:
         with open(self._manifest_path(stage)) as f:

@@ -145,6 +145,12 @@ def main() -> None:
         "run_id": args.run_id, "files": n_files, "clusters": n_clusters,
         "wall_sec": round(wall, 2), "files_per_sec": round(n_files / wall, 1),
         "stages": {m["stage"]: m["wall_ms"] for m in res.metrics},
+        # hot buckets Stage B/C dropped and the members they held (absent
+        # for a stage resumed from its checkpoint)
+        "dropped": {
+            m["stage"]: {k: m[k] for k in ("dropped_buckets", "dropped_members")}
+            for m in res.metrics if "dropped_buckets" in m
+        },
     }
 
     if args.curation_report:

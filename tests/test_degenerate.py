@@ -15,7 +15,7 @@ _SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 def _run(spark, rows):
     corpus = spark.createDataFrame(rows, _SCHEMA)
-    res = run_pipeline(spark, corpus, None, run_id="degen", verbose=False)
+    res = run_pipeline(spark, corpus, None, run_id="degen")
     return {r["key"]: r["cluster_rep"] for r in res.clusters.collect()}
 
 
@@ -126,7 +126,7 @@ def test_incremental_with_empty_increment(spark, tmp_path):
     from autovalidate_backend_api_spark.plans.pipeline import run_pipeline
 
     corpus = spark.createDataFrame(C.corpus_pandas(40))
-    base_res = run_pipeline(spark, corpus, str(tmp_path), run_id="base", verbose=False)
+    base_res = run_pipeline(spark, corpus, str(tmp_path), run_id="base")
     base = {r["key"]: r["cluster_rep"] for r in base_res.clusters.collect()}
 
     empty = corpus.limit(0)

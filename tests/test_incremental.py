@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from dataclasses import replace
 
 import pandas as pd
 import pytest
@@ -95,6 +96,9 @@ def test_metrics_list_every_stage(folded):
         for m in res.metrics:
             assert m["run_id"] == run_id
             assert isinstance(m["wall_ms"], int) and m["wall_ms"] >= 0
+            drops = m["stage"] in ("stage_b_pairs", "stage_c_pairs")
+            for k in ("dropped_buckets", "dropped_members"):
+                assert (isinstance(m.get(k), int) and m[k] >= 0) if drops else k not in m
 
 
 def test_fold_rejects_reused_parent_keys(spark, full_pd, folded):
@@ -108,6 +112,18 @@ def test_fold_rejects_reused_parent_keys(spark, full_pd, folded):
     increment = spark.createDataFrame(pd.concat([new, reused]))
     with pytest.raises(RuntimeError, match=r"duplicate corpus keys \(3\)"):
         incremental_update(spark, increment, folded[0], prev_run_id="base", run_id="dup")
+
+
+def test_fold_rejects_parent_of_another_config(spark, split_corpora, folded):
+    """A parent run written under another config holds band hashes and
+    verified pairs from other parameters: the fold raises instead of
+    mixing them into its own tables."""
+    other = replace(PINNED, jaccard_threshold=0.8)
+    with pytest.raises(RuntimeError, match="written under config"):
+        incremental_update(
+            spark, split_corpora[2], folded[0], prev_run_id="base",
+            run_id="other", cfg=other,
+        )
 
 
 def test_fold_on_fold_matches_scratch(spark, full_pd, scratch):

@@ -111,6 +111,27 @@ def test_manifest_has_per_partition_lineage(spark, pipeline_run):
     assert man["config_hash"] == PINNED.config_hash()
 
 
+def test_checkpoint_read_runs_no_job(spark, pipeline_run):
+    """A stage read passes the schema its manifest holds, so it runs no
+    parquet schema-inference job, and the schema is the one inference
+    gives."""
+    from autovalidate_backend_api_spark.config import PINNED
+    from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
+
+    _, _, _, tmp = pipeline_run
+    mgr = CheckpointManager(spark, tmp, "pytest", PINNED.config_hash())
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-read", "checkpoint reads")
+    try:
+        tables = {s: mgr.read(s) for s in ("keymap", "signatures", "clusters")}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("ckpt-read") == []
+    for stage, df in tables.items():
+        assert df.schema == spark.read.parquet(f"{tmp}/pytest/{stage}/data").schema, stage
+
+
 def test_config_change_invalidates_checkpoints(spark, pipeline_run):
     import dataclasses
 
@@ -156,10 +177,7 @@ def test_outputs_do_not_depend_on_shuffle_partitions(spark, tmp_path):
         spark.conf.set(confs[1], "false")
         for n in (8, 3):
             spark.conf.set(confs[0], str(n))
-            res = run_pipeline(
-                spark, corpus_df, str(tmp_path / f"sp{n}"), run_id="sp",
-                verbose=False,
-            )
+            res = run_pipeline(spark, corpus_df, str(tmp_path / f"sp{n}"), run_id="sp")
             outs.append((
                 {tuple(r) for r in res.clusters.collect()},
                 {tuple(r) for r in res.confirmed_pairs.collect()},
@@ -202,7 +220,7 @@ def test_interrupted_run_resumes_to_same_outputs(spark, tmp_path):
     base = str(tmp_path)
 
     def run():
-        res = run_pipeline(spark, corpus_df, base, run_id="cut", verbose=False)
+        res = run_pipeline(spark, corpus_df, base, run_id="cut")
         return (
             {tuple(r) for r in res.clusters.collect()},
             {tuple(r) for r in res.confirmed_pairs.collect()},

@@ -79,12 +79,10 @@ def test_fingerprint_poor_doc_in_hot_bucket_still_found(spark):
 
 def test_oph_sparse_doc_candidate_parity_at_verify_threshold(spark):
     """VERDICT r2 next-round #7: OPH's documented sparse-doc residual is
-    EXTRA low-J candidates only — for true pairs at J ≥ 0.7 (above the
-    0.66 LSH S-curve midpoint, where the verify threshold lives) the
-    candidate set must be IDENTICAL between OPH and classic MinHash,
-    even when every doc has far fewer shingles than num_perm=128."""
-    import dataclasses
-
+    EXTRA low-J candidates only — every true pair at J ≥ 0.7 (above the
+    0.66 LSH S-curve midpoint, where the verify threshold lives) stays a
+    candidate, even when every doc has far fewer shingles than
+    num_perm=128."""
     import numpy as np
 
     from autovalidate_backend_api_spark.functions import hashing as H
@@ -115,20 +113,111 @@ def test_oph_sparse_doc_candidate_parity_at_verify_threshold(spark):
                 hi_truth.add((keys[a], keys[b]))
     assert len(hi_truth) >= 10, "fixture must plant high-J sparse pairs"
 
-    cands = {}
-    for scheme in ("oph", "classic"):
-        cfg = dataclasses.replace(PINNED, minhash_scheme=scheme)
-        sigs = with_signatures(corpus, cfg, include_winnow=False).persist()
-        pairs, _ = B.candidate_pairs(sigs, cfg)
-        cands[scheme] = {
-            (min(r["src"], r["dst"]), max(r["src"], r["dst"]))
-            for r in pairs.collect()
-        }
-        sigs.unpersist()
+    sigs = with_signatures(corpus, PINNED, include_winnow=False).persist()
+    pairs, _ = B.candidate_pairs(sigs, PINNED)
+    cands = {
+        (min(r["src"], r["dst"]), max(r["src"], r["dst"])) for r in pairs.collect()
+    }
+    sigs.unpersist()
+    assert hi_truth <= cands, "OPH misses high-J sparse pairs"
 
-    assert hi_truth <= cands["oph"], "OPH misses high-J sparse pairs"
-    assert hi_truth <= cands["classic"], "classic misses high-J sparse pairs"
-    assert cands["oph"] & hi_truth == cands["classic"] & hi_truth
+
+def _as_pipeline_corpus(corpus):
+    return corpus.select(
+        F.lit("r").alias("repo"), F.col("key").alias("path"),
+        F.lit("c").alias("commit"), "content",
+    )
+
+
+def _drops(res) -> dict:
+    return {m["stage"]: (m.get("dropped_buckets"), m.get("dropped_members"))
+            for m in res.metrics if m["stage"] in ("stage_b_pairs", "stage_c_pairs")}
+
+
+def _operator_drops(dropped) -> tuple[int, int]:
+    return dropped.count(), dropped.agg(F.sum("bucket_n")).first()[0] or 0
+
+
+def test_pipeline_metrics_count_hot_bucket_drops(spark, tmp_path):
+    """Stage B/C metrics carry the drops of the frames the operators
+    return — the boilerplate corpus drops buckets in both stages — with
+    durable checkpoints and without, also for a stage that writes no
+    pair; a resumed run counts nothing."""
+    import threading
+
+    from autovalidate_backend_api_spark.operators import stage_c_substring as C
+    from autovalidate_backend_api_spark.plans.pipeline import run_pipeline
+    from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
+
+    corpus = _as_pipeline_corpus(_skewed_corpus(spark, n=300, planted=10))
+    res = run_pipeline(spark, corpus, str(tmp_path), "hot")
+    sigs = CheckpointManager(spark, str(tmp_path), "hot", PINNED.config_hash()).read(
+        "signatures"
+    )
+    want = {
+        "stage_b_pairs": _operator_drops(B.candidate_pairs(sigs, PINNED)[1]),
+        "stage_c_pairs": _operator_drops(C.fingerprint_candidates(sigs, PINNED)[1]),
+    }
+    assert want["stage_b_pairs"][0] > 0 and want["stage_c_pairs"][0] > 0
+    assert _drops(res) == want
+    assert _drops(run_pipeline(spark, corpus, None, "hot")) == want
+
+    # no twins: Stage C still drops hot buckets but writes no pair, so
+    # its count cannot come from a missing observation row
+    lone = _run_with_rows(
+        spark, _as_pipeline_corpus(_skewed_corpus(spark, n=300, planted=0)),
+        tmp_path / "lone",
+    )
+    lone_sigs = CheckpointManager(
+        spark, str(tmp_path / "lone"), "zero", PINNED.config_hash()
+    ).read("signatures")
+    assert lone["stage_c_pairs"] == (
+        _operator_drops(C.fingerprint_candidates(lone_sigs, PINNED)[1]), 0
+    )
+    assert lone["stage_c_pairs"][0][0] > 0
+
+    # resume: no stage query runs, so no observation is read (it would
+    # never fill) and no drop field is reported
+    done = []
+    t = threading.Thread(
+        target=lambda: done.append(run_pipeline(spark, corpus, str(tmp_path), "hot")),
+        daemon=True,
+    )
+    t.start()
+    t.join(120)
+    assert done, "resumed run did not return"
+    assert _drops(done[0]) == {"stage_b_pairs": (None, None), "stage_c_pairs": (None, None)}
+
+
+def test_pipeline_metrics_report_zero_drops(spark, tmp_path):
+    """No hot band bucket: AQE prunes the empty drop broadcast from the
+    plan, so the observation has no row; Stage B wrote pairs, so that
+    reads as zero drops. A stage that wrote no rows counts them
+    directly."""
+    from autovalidate_backend_api_spark import corpus as C
+
+    corpus = spark.createDataFrame(C.corpus_pandas(60, seed=11))
+    drops, rows = _run_with_rows(spark, corpus, tmp_path)["stage_b_pairs"]
+    assert rows > 0, "fixture must confirm Stage B pairs"
+    assert drops == (0, 0)
+
+    unique = spark.createDataFrame(
+        [("r", f"p{i}", "c", " ".join(f"doc{i}word{j}" for j in range(60)))
+         for i in range(20)],
+        "repo string, path string, commit string, content string",
+    )
+    res = _run_with_rows(spark, unique, tmp_path / "unique")
+    assert res == {"stage_b_pairs": ((0, 0), 0), "stage_c_pairs": ((0, 0), 0)}
+
+
+def _run_with_rows(spark, corpus, path) -> dict:
+    """{stage: ((dropped_buckets, dropped_members), rows written)}."""
+    from autovalidate_backend_api_spark.plans.pipeline import run_pipeline
+    from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
+
+    res = run_pipeline(spark, corpus, str(path), "zero")
+    mgr = CheckpointManager(spark, str(path), "zero", PINNED.config_hash())
+    return {stage: (d, mgr.rows_of(stage)) for stage, d in _drops(res).items()}
 
 
 def test_span_ops_survive_universal_hot_span(spark):

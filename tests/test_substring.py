@@ -90,37 +90,3 @@ def test_lcs_confirm_pairs_spark(spark):
     kept = lcs_confirm_pairs(pairs, docs, min_containment=0.9).collect()
     assert [(r["src"], r["dst"]) for r in kept] == [(1, 2)]
 
-
-def test_stage_c_lcs_run_mode_confirms_shared_block(spark):
-    """Two docs sharing a long verbatim block, neither containing the
-    other: exact-contains mode finds nothing; lcs_run mode admits the
-    pair on any shared fingerprint and confirms it via the automaton."""
-    from dataclasses import replace
-
-    from autovalidate_backend_api_spark.config import PINNED
-    from autovalidate_backend_api_spark.functions.signatures import with_signatures
-    from autovalidate_backend_api_spark.operators import stage_c_substring as C
-
-    run = " ".join(f"block{i:02d}" for i in range(50))  # ~400 shared chars
-    assert len(run) >= PINNED.contains_min_len
-    a = " ".join(f"alead{i}" for i in range(12)) + " " + run
-    b = run + " " + " ".join(f"btail{i}" for i in range(12))
-    c = " ".join(f"other{i}" for i in range(80))
-    corpus = spark.createDataFrame(
-        [("a", a), ("b", b), ("c", c)], "key string, content string"
-    )
-    sigs = with_signatures(corpus, PINNED, include_winnow=True).persist()
-
-    cands0, _ = C.fingerprint_candidates(sigs, PINNED)
-    assert C.verify_containment(cands0, sigs, PINNED).count() == 0
-
-    cfg = replace(PINNED, containment_confirm="lcs_run")
-    assert cfg.config_hash() != PINNED.config_hash()  # checkpoint-invalidating
-    cands, _ = C.fingerprint_candidates(sigs, cfg)
-    rows = {(r["src"], r["dst"]): r for r in C.verify_containment(cands, sigs, cfg).collect()}
-    assert ("a", "b") in rows and len(rows) == 1
-    r = rows[("a", "b")]
-    # score = lcs / min(len): the shared run over the shorter side
-    assert r["jaccard"] >= len(run) / max(len(a), len(b))
-    assert r["stage"] == "substring"
-    sigs.unpersist()
