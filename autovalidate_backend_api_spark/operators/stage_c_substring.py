@@ -19,11 +19,11 @@ proposes pairs, native ``contains()`` on normalized text confirms.
 
 Scale: identical shape to the band join — explode → bucket-cap → self
 join. The verify join carries normalized content. Every Stage A
-survivor enters, including rows Stage B already confirmed: the
-reference runs semantic search only when fuzzy produced nothing
-(search.py:140), but here the B-confirmed pairs are verified again and
-dropped afterwards by the pipeline's first-stage-wins dedup
-(``plans/pipeline.py::_dedup_pairs``).
+survivor enters; as the reference runs semantic search only when fuzzy
+produced nothing (search.py:140), the pipeline (``run_plan``) anti-joins
+the candidates against Stage B's pairs before ``verify_containment``, so
+``stage_c_pairs`` holds only what Stage C alone found. These operators
+take no Stage B input: the ``containment_pairs`` gate runs them alone.
 """
 
 from __future__ import annotations

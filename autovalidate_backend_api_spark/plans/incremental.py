@@ -27,8 +27,9 @@ parent the plan
    re-examined (the cache-hit short-circuit as dataflow),
 3. verifies new candidates, appends to confirmed_pairs,
 4. re-runs connected components over the union edge set (cheap: edges
-   ≪ files), after the batch's duplicate-key/collision check over the
-   union keymap — an increment row re-using a parent key raises.
+   ≪ files). The batch's duplicate-key/collision check runs where the
+   union keymap is made, before any signing: an increment row re-using
+   a parent key raises before the fold writes any checkpoint.
 
 Equivalence contract (tested): incremental(full₁ + increment) produces
 the same clusters as a from-scratch run over the union — modulo pairs

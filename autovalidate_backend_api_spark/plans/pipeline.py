@@ -16,10 +16,11 @@ Dataflow reframing of the reference cascade
 
 Stage gating: Stage B/C run on sha-survivors only — exact copies never
 reach the expensive stages (the reference's cache-hit short-circuit,
-app.py:340-347). Confirmed pairs from B are NOT excluded from C's input
-corpus (C is cheap after bucket caps and catches containments between
-already-B-matched files' clusters too); the B/C union is deduplicated
-with a first-stage-wins window (SURVEY.md A2).
+app.py:340-347). Stage C is the fallback for what Stage B did not
+confirm (the reference's semantic pass, search.py:139-154): its
+candidates are anti-joined against this run's Stage B pairs before the
+containment verify, so the sha, B and C pair sets are disjoint by
+construction and ``confirmed_pairs`` is their plain union.
 
 Every stage output is an idempotent checkpoint commit; re-running the
 same (run_id, config) skips completed stages (north_rule resumability).
@@ -68,30 +69,6 @@ class PipelineResult:
     clusters: DataFrame          # key, cluster_rep
     confirmed_pairs: DataFrame   # src, dst, jaccard, hamming, stage
     metrics: list[dict]
-
-
-def _dedup_pairs(pairs: DataFrame) -> DataFrame:
-    """Canonical (src<dst) + first-stage-wins dedup (A2 window form)."""
-    canon = pairs.select(
-        F.least("src", "dst").alias("src"),
-        F.greatest("src", "dst").alias("dst"),
-        "jaccard",
-        "hamming",
-        "stage",
-    )
-    w = Window.partitionBy("src", "dst").orderBy(
-        # sha > minhash > simhash > substring priority, then best score
-        F.when(F.col("stage") == "sha", 0)
-        .when(F.col("stage") == "minhash", 1)
-        .when(F.col("stage") == "simhash", 2)
-        .otherwise(3),
-        F.desc("jaccard"),
-    )
-    return (
-        canon.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def cluster_table(
@@ -146,9 +123,10 @@ def _drop_counts(obs: Observation, dropped: DataFrame, rows_out: int | None) -> 
     empty (the anti-join loses its empty broadcast side), or when an
     empty stage after the anti-join made the subtree an empty relation.
     ``sizes`` and the anti-join's left side are one table, and every
-    path from there to the output is inner joins, filters and
-    aggregations (no union), so a stage that wrote rows lost it the
-    first way: no drops. One that wrote none re-counts."""
+    path from there to the output is inner joins, filters, aggregations
+    and Stage C's left-anti join against the Stage B pairs (the
+    observed side on its left; no union), so a stage that wrote rows
+    lost it the first way: no drops. One that wrote none re-counts."""
     try:
         row = obs.get
     except Py4JJavaError as e:  # toPyRow asserts on the missing row
@@ -275,21 +253,47 @@ def run_plan(
     hashed = keyed.select(
         F.xxhash64("key_str").alias("key"), "sha", "content"
     )
-    # coalesce (narrow, no shuffle): the keymap is probed by several
-    # SMALL downstream jobs (the duplicate/collision check aggregation,
-    # the broadcast-join translation, the singleton anti-join) — cached
-    # at the provider's input partitioning (128 at bench) every probe
-    # pays a full wave of near-empty tasks (measured 1.76 s for one agg
-    # over 49k cached rows; ~0.4 s at shuffle_partitions). The count is
-    # the parameterized cfg knob, not a core-count constant. A fold's
-    # keymap is a plain union with its parent's: duplicate keys are the
-    # clusters step's check, not a corpus-wide distinct.
-    keymap = stage(
-        "keymap",
-        lambda: with_parent(
+
+    def _keymap() -> DataFrame:
+        # One grouped pass over the ids, before the keymap is written,
+        # tells duplicate-input keys from genuine xxhash64 collisions (a
+        # corpus with repeated (repo,path,commit) rows is an input error,
+        # not a hash failure): an id held by several rows of one key_str
+        # is a duplicate key, one held by several key_strs a collision.
+        # A bad corpus raises before any signing, a resumed run skips the
+        # check, and every later stage may assume unique keys.
+        km = with_parent(
             "keymap", keyed.select(F.xxhash64("key_str").alias("id"), "key_str")
-        ).coalesce(cfg.shuffle_partitions),
-    )
+        )
+        clashes = (
+            km.groupBy("id")
+            .agg(F.count("*").alias("n"), F.min("key_str").alias("lo"),
+                 F.max("key_str").alias("hi"))
+            .filter(F.col("n") > 1)
+            .collect()
+        )
+        n_dup = sum(r["n"] - 1 for r in clashes if r["lo"] == r["hi"])
+        if n_dup:
+            raise RuntimeError(
+                f"duplicate corpus keys ({n_dup}): "
+                "(repo, path, commit) must be unique per corpus row"
+            )
+        if clashes:
+            raise RuntimeError(
+                f"xxhash64 key collision ({len(clashes)}): "
+                "switch to the 128-bit id documented above"
+            )
+        # coalesce (narrow, no shuffle): the keymap is probed by SMALL
+        # downstream jobs (the broadcast-join translation, the singleton
+        # anti-join) — at the provider's input partitioning (128 at
+        # bench) every probe pays a full wave of near-empty tasks
+        # (measured 1.76 s for one agg over 49k cached rows; ~0.4 s at
+        # shuffle_partitions). A fold's keymap is a plain union with its
+        # parent's, kept unique by the check above.
+        return km.coalesce(cfg.shuffle_partitions)
+
+    keymap = stage("keymap", _keymap)
+
     # ONE sha256 pass over the corpus serves all of Stage A: the slim
     # (key, sha) projection is persisted (8-byte id + 64-char hex per
     # row — MBs at bench scale, and the same shape a production run
@@ -371,53 +375,41 @@ def run_plan(
             sigs, cfg, fp_filter=touched, observation=obs
         )
         drops["stage_c_pairs"] = (obs, dropped)
-        return C.verify_containment(_touching(cands, new_keys), sigs, cfg)
+        # the fallback for what Stage B did not confirm (AQE picks the join)
+        unresolved = _touching(cands, new_keys).join(
+            b_pairs.select("src", "dst"), ["src", "dst"], "left_anti"
+        )
+        return C.verify_containment(unresolved, sigs, cfg)
 
     c_pairs = stage("stage_c_pairs", _stage_c)
 
-    # ---- union + dedup + connected components ---------------------------
+    # ---- union + connected components -----------------------------------
+    # A plain union: no (src, dst) repeats and every row has src < dst.
+    # - A sha edge has an endpoint never signed (a member is no
+    #   representative; a fold does not sign an already-signed sha's new
+    #   representative), so no sha edge is a B or C pair.
+    # - B pairs are unique (grouped by (src, dst); signature keys are
+    #   unique); C pairs are unique (``.distinct()``) and skip B's.
+    # - B and C emit least/greatest; a sha edge's src is its group's
+    #   minimum id.
+    # - Every pair a fold adds touches an increment key, which the key
+    #   check keeps apart from the parent's keys.
     def _confirmed():
-        all_pairs = (
+        return with_parent(
+            "confirmed_pairs",
             sha_pairs.select("src", "dst", F.col("score").alias("jaccard"),
                              F.lit(0).alias("hamming"), "stage")
             .unionByName(b_pairs)
-            .unionByName(c_pairs)
+            .unionByName(c_pairs),
         )
-        return _dedup_pairs(with_parent("confirmed_pairs", all_pairs))
 
     confirmed = stage("confirmed_pairs", _confirmed)
 
-    def _clusters():
-        # One grouped pass over the ids tells duplicate-input keys from
-        # genuine xxhash64 collisions (a corpus with repeated
-        # (repo,path,commit) rows is an input error, not a hash failure):
-        # an id held by several rows of one key_str is a duplicate key,
-        # one held by several key_strs a collision.
-        clashes = (
-            keymap.groupBy("id")
-            .agg(F.count("*").alias("n"), F.min("key_str").alias("lo"),
-                 F.max("key_str").alias("hi"))
-            .filter(F.col("n") > 1)
-            .collect()
-        )
-        n_dup = sum(r["n"] - 1 for r in clashes if r["lo"] == r["hi"])
-        if n_dup:
-            raise RuntimeError(
-                f"duplicate corpus keys ({n_dup}): "
-                "(repo, path, commit) must be unique per corpus row"
-            )
-        if clashes:
-            raise RuntimeError(
-                f"xxhash64 key collision ({len(clashes)}): "
-                "switch to the 128-bit id documented above"
-            )
-        # the materialization already counted confirmed_pairs (ephemeral
-        # count / parquet manifest) — re-counting would be one more
-        # driver-synchronized job for a number we have
-        return cluster_table(
-            keymap, confirmed, cfg, ckpt.rows_of("confirmed_pairs")
-        )
-
-    clusters = stage("clusters", _clusters)
+    # the materialization already counted confirmed_pairs (ephemeral
+    # count / parquet manifest) — re-counting would be one more
+    # blocking job for a number we have
+    clusters = stage("clusters", lambda: cluster_table(
+        keymap, confirmed, cfg, ckpt.rows_of("confirmed_pairs")
+    ))
 
     return PipelineResult(clusters=clusters, confirmed_pairs=confirmed, metrics=metrics)

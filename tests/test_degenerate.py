@@ -26,9 +26,10 @@ def test_single_file(spark):
     assert k == v
 
 
-def test_repeated_corpus_row_raises(spark):
+def test_repeated_corpus_row_raises(spark, tmp_path):
     """A (repo, path, commit) key given twice is an input error: the
-    clusters step's key check names it instead of clustering it."""
+    keymap stage's key check names it instead of clustering it, and a
+    checkpointed run raises before any signature is written."""
     rows = [
         ("r", "a.py", "c1", "py", "first file body"),
         ("r", "b.py", "c1", "py", "second file body"),
@@ -36,6 +37,10 @@ def test_repeated_corpus_row_raises(spark):
     ]
     with pytest.raises(RuntimeError, match=r"duplicate corpus keys \(1\)"):
         _run(spark, rows)
+    corpus = spark.createDataFrame(rows, _SCHEMA)
+    with pytest.raises(RuntimeError, match=r"duplicate corpus keys \(1\)"):
+        run_pipeline(spark, corpus, str(tmp_path), run_id="dup")
+    assert not (tmp_path / "dup" / "signatures").exists()
 
 
 def test_all_identical_contents(spark):

@@ -180,7 +180,8 @@ def test_oph_jaccard_estimate():
 
 def test_oph_densification_sparse_sets():
     """Sets far smaller than num_perm still produce full signatures with
-    the estimator roughly tracking J (rotation densification)."""
+    the estimator roughly tracking J (optimal, hash-probing
+    densification)."""
     base = H.norm_shingle_hashes(" ".join(_tokens(30)))  # 28 shingles < 128
     sa = H.oph_signature(base)
     assert (sa != H.EMPTY_SLOT).all() or base.size == 0

@@ -4,6 +4,8 @@ db_lookup.py:52-83, as batch dataflow)."""
 
 from __future__ import annotations
 
+import contextlib
+import os
 import shutil
 import tempfile
 from dataclasses import replace
@@ -44,6 +46,14 @@ def split_corpora(spark, full_pd):
 def _survivors(spark, tmp: str, run_id: str) -> set:
     mgr = CheckpointManager(spark, tmp, run_id, PINNED.config_hash())
     return {(r.key, r.sha) for r in mgr.read("stage_a_survivors").collect()}
+
+
+def assert_unique_canonical(pairs) -> None:
+    """``confirmed_pairs`` is a plain union of disjoint pair sets: no
+    (src, dst) appears twice, and every row has src < dst."""
+    rows = [(r.src, r.dst) for r in pairs.select("src", "dst").collect()]
+    assert len(rows) == len(set(rows))
+    assert all(src < dst for src, dst in rows)
 
 
 @pytest.fixture(scope="module")
@@ -105,13 +115,26 @@ def test_fold_rejects_reused_parent_keys(spark, full_pd, folded):
     """An increment that re-uses (repo, path, commit) keys of its parent
     with edited content is an input error, as in a from-scratch run:
     the fold's key check raises instead of writing a second signature
-    under the same key."""
+    under the same key, and it raises where the keymap is made, before
+    anything is signed."""
     reused = full_pd[full_pd.base_id < 80][COLS].head(3).copy()
     reused["content"] = reused["content"] + "\n# edited\n"
     new = full_pd[full_pd.base_id >= 80][COLS]
     increment = spark.createDataFrame(pd.concat([new, reused]))
     with pytest.raises(RuntimeError, match=r"duplicate corpus keys \(3\)"):
         incremental_update(spark, increment, folded[0], prev_run_id="base", run_id="dup")
+    for stage in ("signatures_new", "signatures"):
+        assert not os.path.exists(os.path.join(folded[0], "dup", stage)), stage
+
+
+def test_fold_stage_c_skips_stage_b_pairs(spark, folded):
+    """Stage C verifies only what Stage B did not confirm: no (src, dst)
+    is in both pair tables of the base run or of the fold."""
+    for run_id in ("base", "upd"):
+        mgr = CheckpointManager(spark, folded[0], run_id, PINNED.config_hash())
+        b, c = (mgr.read(s).select("src", "dst")
+                for s in ("stage_b_pairs", "stage_c_pairs"))
+        assert b.join(c, ["src", "dst"]).isEmpty(), run_id
 
 
 def test_fold_rejects_parent_of_another_config(spark, split_corpora, folded):
@@ -143,11 +166,13 @@ def test_fold_on_fold_matches_scratch(spark, full_pd, scratch):
     tmp = tempfile.mkdtemp(prefix="av_incr_chain_")
     try:
         run_pipeline(spark, base_df, tmp, "base")
-        incremental_update(spark, fold1_df, tmp, prev_run_id="base", run_id="f1")
+        fold1 = incremental_update(spark, fold1_df, tmp, prev_run_id="base", run_id="f1")
         incr = incremental_update(spark, fold2_df, tmp, prev_run_id="f1", run_id="f2")
         got = {r["key"]: r["cluster_rep"] for r in incr.clusters.collect()}
         assert got == scratch[0]
         assert _survivors(spark, tmp, "f2") == scratch[1]
+        assert_unique_canonical(fold1.confirmed_pairs)
+        assert_unique_canonical(incr.confirmed_pairs)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -244,3 +269,46 @@ def test_increment_signs_only_new_content(spark, split_corpora, folded):
     n_new_sigs = mgr.manifest("signatures_new")["rows"]
     assert n_new_sigs <= new_df.count()
     assert n_new_sigs > 0
+
+
+@contextlib.contextmanager
+def _job_group(sc, group: str):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_job_budget(spark, split_corpora):
+    """Spark jobs per run, the cost that dominates at this size. Before
+    Stage C skipped Stage B's pairs, the checkpointed base run over the
+    first 80 bases took 37 jobs and the fold of the rest onto it 45
+    (this corpus, ``shuffle_partitions`` 8, an empty cache); neither may
+    take more. Re-running a completed ``run_id`` reads every stage back
+    and submits no job."""
+    _, old_df, new_df = split_corpora
+    sc = spark.sparkContext
+    tmp = tempfile.mkdtemp(prefix="av_incr_jobs_")
+    try:
+        runs = {
+            "base": lambda: run_pipeline(spark, old_df, tmp, "base"),
+            "fold": lambda: incremental_update(
+                spark, new_df, tmp, prev_run_id="base", run_id="upd"
+            ),
+        }
+        for name, run in runs.items():
+            # a run leaves its Stage A tables cached; another run over
+            # the same corpus would reuse them
+            spark.catalog.clearCache()
+            for attempt in ("first", "rerun"):
+                with _job_group(sc, f"jobs-{name}-{attempt}"):
+                    run()
+        jobs = {g: len(sc.statusTracker().getJobIdsForGroup(f"jobs-{g}"))
+                for g in ("base-first", "base-rerun", "fold-first", "fold-rerun")}
+        assert jobs["base-first"] <= 37, jobs
+        assert jobs["fold-first"] <= 45, jobs
+        assert jobs["base-rerun"] == jobs["fold-rerun"] == 0, jobs
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

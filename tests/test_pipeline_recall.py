@@ -12,6 +12,7 @@ import pytest
 
 from autovalidate_backend_api_spark import corpus as C
 from autovalidate_backend_api_spark.plans.pipeline import run_pipeline
+from test_incremental import assert_unique_canonical
 
 N_BASE = 200
 
@@ -175,9 +176,13 @@ def test_outputs_do_not_depend_on_shuffle_partitions(spark, tmp_path):
     outs = []
     try:
         spark.conf.set(confs[1], "false")
-        for n in (8, 3):
+        for n, ckpt in ((8, True), (3, True), (3, False)):
             spark.conf.set(confs[0], str(n))
-            res = run_pipeline(spark, corpus_df, str(tmp_path / f"sp{n}"), run_id="sp")
+            res = run_pipeline(
+                spark, corpus_df, str(tmp_path / f"sp{n}") if ckpt else None,
+                run_id="sp",
+            )
+            assert_unique_canonical(res.confirmed_pairs)
             outs.append((
                 {tuple(r) for r in res.clusters.collect()},
                 {tuple(r) for r in res.confirmed_pairs.collect()},
@@ -185,11 +190,26 @@ def test_outputs_do_not_depend_on_shuffle_partitions(spark, tmp_path):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
-    (clusters8, pairs8), (clusters3, pairs3) = outs
+    (clusters8, pairs8), (clusters3, pairs3), ephemeral = outs
     # every stage that feeds confirmed_pairs contributes
     assert {r[-1] for r in pairs8} >= {"sha", "minhash", "substring"}
     assert clusters8 == clusters3
     assert pairs8 == pairs3
+    # checkpoint_dir=None runs the same plan
+    assert ephemeral == (clusters8, pairs8)
+
+
+def test_stage_c_skips_stage_b_pairs(spark, pipeline_run):
+    """Stage C is the fallback for what Stage B did not confirm: no
+    (src, dst) is in both pair tables."""
+    from autovalidate_backend_api_spark.config import PINNED
+    from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
+
+    _, _, _, tmp = pipeline_run
+    mgr = CheckpointManager(spark, tmp, "pytest", PINNED.config_hash())
+    b, c = (mgr.read(s).select("src", "dst") for s in ("stage_b_pairs", "stage_c_pairs"))
+    assert mgr.rows_of("stage_c_pairs") > 0
+    assert b.join(c, ["src", "dst"]).isEmpty()
 
 
 def test_distributed_cluster_table_matches_checkpoint(spark, pipeline_run):

@@ -232,3 +232,51 @@ def test_interval_concurrency_windows_run_on_collapsed_boundaries(spark, sf_dir)
     assert "Join" not in plan
     first_window = plan.index("Window")
     assert "HashAggregate" in plan[first_window:], plan
+
+
+def test_pipeline_verify_joins_fall_back_to_sort_merge(spark, tmp_path, monkeypatch):
+    """With broadcasts off (the scale at which no pair or signature side
+    fits), the Stage C candidate ⋉̸ Stage B pairs anti-join and the
+    Stage B and Stage C verify joins plan as SortMergeJoin. The only
+    broadcasts left are the hinted hot-bucket sets (anti-joined on
+    ``bucket`` / ``fp``); the signature side is never broadcast."""
+    import re
+
+    from autovalidate_backend_api_spark import corpus as C
+    from autovalidate_backend_api_spark.plans.pipeline import run_pipeline
+    from autovalidate_backend_api_spark.sources.checkpoint import CheckpointManager
+
+    written: dict = {}
+    write = CheckpointManager.write
+
+    def capture(self, stage, df):
+        written[stage] = df
+        return write(self, stage, df)
+
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    monkeypatch.setattr(CheckpointManager, "write", capture)
+    try:
+        spark.conf.set(conf, "-1")
+        run_pipeline(spark, spark.createDataFrame(C.corpus_pandas(40, seed=3)),
+                     str(tmp_path), run_id="smj")
+        plans = {}
+        for stage in ("stage_b_pairs", "stage_c_pairs"):
+            written[stage].collect()  # the final adaptive plan
+            plan = written[stage]._jdf.queryExecution().executedPlan().toString()
+            assert "isFinalPlan=true" in plan, plan
+            plans[stage] = plan.split("== Initial Plan ==")[0]
+    finally:
+        spark.conf.set(conf, prev)
+
+    def smj(cols, kind):
+        keys = ", ".join(rf"{c}#\d+L?" for c in cols)
+        return re.compile(rf"SortMergeJoin \[{keys}\], \[{keys}\], {kind}")
+
+    assert smj(["src", "dst"], "LeftAnti").search(plans["stage_c_pairs"]), plans["stage_c_pairs"]
+    for stage, plan in plans.items():
+        for key in ("src", "dst"):
+            assert smj([key], "Inner").search(plan), (stage, plan)
+        bhj = re.findall(r"BroadcastHashJoin \[(\w+)#\d+L?\], \[\w+#\d+L?\], (\w+)", plan)
+        assert set(bhj) <= {("bucket", "LeftAnti"), ("fp", "LeftAnti")}, (stage, plan)
+        assert plan.count("BroadcastExchange") <= len(bhj), (stage, plan)
